@@ -42,6 +42,7 @@ def main() -> None:
 
     from yanwenxian_week3_data_pipeline_spark.plans import all_queries
     from yanwenxian_week3_data_pipeline_spark.session import get_spark
+    from yanwenxian_week3_data_pipeline_spark.sources.tables import load_table
 
     spark = get_spark("ywx-bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -55,7 +56,7 @@ def main() -> None:
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.window import Window
 
-    spark.read.parquet(f"{sf_dir}/region.parquet").count()
+    load_table(spark, sf_dir, "region").count()
     r = spark.range(1000)
     w = Window.partitionBy(F.col("id") % 10).orderBy("id")
     r.withColumn("rn", F.row_number().over(w)).groupBy(F.col("id") % 7).count().write.format(
@@ -187,17 +188,6 @@ def main() -> None:
         )
     )
 
-    # record non-default MinHash signatures so a certification produced under
-    # a leftover A/B env override is detectable in the artifact (ADVICE r9);
-    # absent key = production defaults
-    from yanwenxian_week3_data_pipeline_spark import constants as _c
-
-    minhash_override = (
-        {"num_hashes": _c.MINHASH_NUM_HASHES, "bands": _c.MINHASH_BANDS}
-        if _c.MINHASH_OVERRIDE_ACTIVE
-        else None
-    )
-
     total = round(sum(timings.values()), 3)
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     try:
@@ -228,11 +218,6 @@ def main() -> None:
                 "extended_load_1m_per_query": ext_loads,
                 "load_1m_max": round(max(observed), 2) if observed else None,
                 "load_contaminated": contaminated,
-                **(
-                    {"minhash_override": minhash_override}
-                    if minhash_override
-                    else {}
-                ),
             }
         )
     )

@@ -137,6 +137,57 @@ def test_containment_counting_small_sides_degrade_past_size_gate(
     assert node_count(unknown, "BroadcastHashJoin") == node_count(gated, "BroadcastHashJoin")
 
 
+def test_containment_direct_call_default_has_no_side_broadcast(spark):
+    # a direct dedup_containment call has no size gate: its default must
+    # not pin the per-doc size table or the common-shingle slice as
+    # broadcasts (both scale with the corpus). The only hinted subtree left
+    # is the 1-row c_tot scalar; an explicit F.broadcast restores the others.
+    from pyspark.sql import functions as F
+
+    from yanwenxian_week3_data_pipeline_spark.operators.dedup import dedup_containment
+
+    df = spark.createDataFrame(
+        [(1, "a b c d e f"), (2, "a b c d e f g h"), (3, "x y z w")],
+        "doc_id long, c string",
+    )
+
+    def hinted_children(out) -> set[str]:
+        lines = out._jdf.queryExecution().analyzed().toString().split("\n")
+        return {
+            re.sub(r"#\d+L?", "", lines[i + 1].strip(" :+-"))
+            for i, line in enumerate(lines)
+            if "strategy=broadcast" in line
+        }
+
+    default = hinted_children(dedup_containment(df, "c", "doc_id", 0.5, 64))
+    assert default == {"Aggregate [count(1) AS c_tot]"}
+    pinned = hinted_children(dedup_containment(df, "c", "doc_id", 0.5, 64, small_hint=F.broadcast))
+    assert len(pinned - default) == 3  # na, nb and the common-shingle slice
+
+
+def test_containment_direct_call_default_still_broadcasts_small_sides(spark):
+    # without a hint, AQE still broadcasts the size table and the common-
+    # shingle slice once their runtime size is known to be small: at small
+    # scale the default runs the same join strategies as the pinned hint
+    from pyspark.sql import functions as F
+
+    from yanwenxian_week3_data_pipeline_spark.operators.dedup import dedup_containment
+
+    df = spark.createDataFrame(
+        [(i, f"common words here {i % 3} tail {i}") for i in range(40)],
+        "doc_id long, c string",
+    )
+
+    def final_joins(**hint) -> tuple[int, int]:
+        out = dedup_containment(df, "c", "doc_id", 0.5, 64, **hint)
+        out.collect()
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        final = plan.split("== Initial Plan ==")[0]
+        return final.count("BroadcastHashJoin"), final.count("SortMergeJoin")
+
+    assert final_joins() == final_joins(small_hint=F.broadcast)
+
+
 def test_q1_pushdown_and_pruning(spark, sf_dir):
     plan = plan_of(spark, "q1_pricing_summary", sf_dir)
     # the shipdate filter must reach the parquet scan…

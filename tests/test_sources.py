@@ -7,7 +7,7 @@ import datetime
 
 
 def test_load_events_does_not_mutate_session_conf(spark, sf_dir):
-    from yanwenxian_week3_data_pipeline_spark.sources.tables import load_events
+    from yanwenxian_week3_data_pipeline_spark.sources.tables import load_table
 
     probes = [
         "spark.sql.session.timeZone",
@@ -25,7 +25,7 @@ def test_load_events_does_not_mutate_session_conf(spark, sf_dir):
         return out
 
     before = snapshot()
-    df = load_events(spark, sf_dir)
+    df = load_table(spark, sf_dir, "events")
     assert df.count() > 0
     assert snapshot() == before
 
@@ -34,14 +34,14 @@ def test_load_events_ntz_regardless_of_infer_conf(spark, sf_dir):
     """The explicit read schema must force TIMESTAMP_NTZ even in a session
     where parquet NTZ inference is disabled (a driver-like default session
     could have it off); values must be identical either way."""
-    from yanwenxian_week3_data_pipeline_spark.sources.tables import load_events
+    from yanwenxian_week3_data_pipeline_spark.sources.tables import load_table
 
     key = "spark.sql.parquet.inferTimestampNTZ.enabled"
     original = spark.conf.get(key)
-    base = load_events(spark, sf_dir).orderBy("event_id").limit(5).collect()
+    base = load_table(spark, sf_dir, "events").orderBy("event_id").limit(5).collect()
     try:
         spark.conf.set(key, "false")
-        df = load_events(spark, sf_dir)
+        df = load_table(spark, sf_dir, "events")
         assert df.schema["ts"].dataType.typeName() == "timestamp_ntz"
         got = df.orderBy("event_id").limit(5).collect()
     finally:
@@ -53,12 +53,44 @@ def test_load_events_ntz_regardless_of_infer_conf(spark, sf_dir):
 def test_two_loaders_interleaved_share_session_safely(spark, sf_dir):
     """Interleaving an events load between two reads of another table must
     not change the second read (loaders hold no session-level state)."""
-    from yanwenxian_week3_data_pipeline_spark.sources.tables import load_events, load_table
+    from yanwenxian_week3_data_pipeline_spark.sources.tables import load_table
 
     first = load_table(spark, sf_dir, "orders").orderBy("o_orderkey").limit(3).collect()
-    load_events(spark, sf_dir).count()
+    load_table(spark, sf_dir, "events").count()
     second = load_table(spark, sf_dir, "orders").orderBy("o_orderkey").limit(3).collect()
     assert first == second
+
+
+def test_declared_schemas_match_the_files(spark, sf_dir):
+    """A declared read schema must name the same columns and types that
+    parquet inference finds in the files, so the declaration cannot drift
+    from the data."""
+    from yanwenxian_week3_data_pipeline_spark.sources import tables
+
+    for name in tables._SCHEMAS:
+        declared = tables.load_table(spark, sf_dir, name).schema
+        inferred = spark.read.parquet(f"{sf_dir}/{name}.parquet").schema
+        assert [(f.name, f.dataType) for f in declared] == [
+            (f.name, f.dataType) for f in inferred
+        ]
+
+
+def test_fanned_out_events_keep_declared_schema(spark, sf_dir, monkeypatch):
+    """The fan-out and the declared schema compose: a fanned-out events load
+    is repartitioned AND keeps ts as TIMESTAMP_NTZ when NTZ inference is off."""
+    from yanwenxian_week3_data_pipeline_spark.sources import tables
+
+    floor = tables.SCAN_FANOUT_TABLE_MIN_BYTES
+    monkeypatch.setattr(tables, "_local_parquet_bytes", lambda _p: floor)
+    key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    original = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "false")
+        df = tables.load_table(spark, sf_dir, "events", floor)
+        assert df.schema["ts"].dataType.typeName() == "timestamp_ntz"
+    finally:
+        spark.conf.set(key, original)
+    assert df.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
 
 
 def test_jsonl_audited_separates_corrupt_lines(spark, tmp_path):
@@ -113,38 +145,105 @@ def test_load_articles_nonlist_wrapper_falls_through(spark, tmp_path):
     assert rows[0].title == "T"
 
 
-def test_read_parquet_fanout_gates(spark, tmp_path):
-    """The under-split-scan fan-out must (a) leave small files alone —
-    below min_bytes the shuffle cannot pay for itself, (b) repartition a
-    big single-split file to defaultParallelism, and (c) self-disable when
-    the estimated split count already reaches the core count (the real-
-    scale case, emulated by shrinking maxPartitionBytes)."""
-    from yanwenxian_week3_data_pipeline_spark.sources.tables import (
-        read_parquet_fanout,
-    )
+def test_read_parquet_fanout_gates(spark, tmp_path, monkeypatch):
+    """The under-split-scan fan-out of ``load_table`` must, for every floor
+    its callers pass, (a) leave a table below the floor alone — the shuffle
+    cannot pay for itself, (b) repartition a single-split table at the floor
+    to defaultParallelism, and (c) self-disable when the estimated split
+    count already reaches the core count (the real-scale case, emulated by
+    shrinking maxPartitionBytes). A plain load never fans out."""
+    from yanwenxian_week3_data_pipeline_spark.sources import tables
+    from yanwenxian_week3_data_pipeline_spark.sources.tables import load_table
 
-    small = str(tmp_path / "small.parquet")
-    spark.range(10).coalesce(1).write.parquet(small)
-    assert (
-        read_parquet_fanout(spark, small, 1 << 20).rdd.getNumPartitions() == 1
-    )
-
-    big = str(tmp_path / "big.parquet")
+    small, big = str(tmp_path / "small"), str(tmp_path / "big")
+    spark.range(10).coalesce(1).write.parquet(f"{small}/documents.parquet")
     spark.range(300_000).selectExpr(
         "id", "repeat(uuid(), 4) AS pad"
-    ).coalesce(1).write.parquet(big)
+    ).coalesce(1).write.parquet(f"{big}/documents.parquet")
     par = spark.sparkContext.defaultParallelism
-    fanned = read_parquet_fanout(spark, big, 1 << 20)
+
+    def fans_out(df) -> bool:
+        return "Repartition" in df._jdf.queryExecution().logical().toString()
+
+    # measured sizes: the tiny file stays put, the big one fans out
+    assert load_table(spark, small, "documents", 1 << 20).rdd.getNumPartitions() == 1
+    fanned = load_table(spark, big, "documents", 1 << 20)
     assert fanned.rdd.getNumPartitions() == par
     # values identical, only the partitioning moved
     assert fanned.count() == 300_000
+    assert not fans_out(load_table(spark, big, "documents"))
 
     old = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    try:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", str(16 << 10))
-        # estimated splits = size/16KB >> cores -> no extra repartition node
-        df = read_parquet_fanout(spark, big, 1 << 20)
-        assert df.rdd.getNumPartitions() > 1  # the scan itself is split
-        assert "Repartition" not in df._jdf.queryExecution().logical().toString()
-    finally:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+    for floor in (
+        tables.SCAN_FANOUT_TABLE_MIN_BYTES,
+        tables.SCAN_FANOUT_TEXT_MIN_BYTES,
+        tables.SCAN_FANOUT_SUFFIX_MIN_BYTES,
+    ):
+        monkeypatch.setattr(tables, "_local_parquet_bytes", lambda _p, n=floor - 1: n)
+        assert not fans_out(load_table(spark, big, "documents", floor))
+        monkeypatch.setattr(tables, "_local_parquet_bytes", lambda _p, n=floor: n)
+        at_floor = load_table(spark, big, "documents", floor)
+        assert fans_out(at_floor)
+        assert at_floor.rdd.getNumPartitions() == par
+        try:
+            # estimated splits = floor / (floor // par) >= cores -> no
+            # extra repartition node
+            spark.conf.set("spark.sql.files.maxPartitionBytes", str(floor // par))
+            assert not fans_out(load_table(spark, big, "documents", floor))
+        finally:
+            spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+
+
+def test_one_read_path_for_registry_tables():
+    """Plan, streaming and pipeline modules read registry tables only
+    through ``sources.tables.load_table``: no ``spark.read...parquet(`` /
+    ``.load(`` of their own, and no private helper that only wraps a load."""
+    import ast
+    from pathlib import Path
+
+    import yanwenxian_week3_data_pipeline_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    files = sorted(
+        [*(root / "plans").glob("*.py"), *(root / "streaming").glob("*.py"), root / "pipeline.py"]
+    )
+
+    def chain(node):
+        names = []
+        while isinstance(node, (ast.Attribute, ast.Call)):
+            if isinstance(node, ast.Attribute):
+                names.append(node.attr)
+                node = node.value
+            else:
+                node = node.func
+        return names
+
+    def is_read(node) -> bool:
+        return (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("parquet", "load")
+            and "read" in chain(node.func.value)
+        )
+
+    def is_load(node) -> bool:
+        return is_read(node) or (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Name)
+            and node.func.id == "load_table"
+        )
+
+    bad = []
+    for f in files:
+        for node in ast.walk(ast.parse(f.read_text())):
+            if is_read(node):
+                bad.append(f"{f.name}:{node.lineno} reads parquet directly")
+            if isinstance(node, ast.FunctionDef):
+                body = [
+                    s for s in node.body
+                    if not (isinstance(s, ast.Expr) and isinstance(s.value, ast.Constant))
+                ]
+                if len(body) == 1 and isinstance(body[0], ast.Return) and is_load(body[0].value):
+                    bad.append(f"{f.name}:{node.lineno} defines table loader {node.name}")
+    assert len(files) > 10
+    assert bad == []

@@ -14,10 +14,10 @@ from pyspark.sql import functions as F
 def stream_src(spark, sf_dir, tmp_path_factory):
     """Dump events to a JSONL dir (the shape a streaming feed has) with ts
     as epoch-micros-derived timestamps serialized by Spark's JSON writer."""
-    from yanwenxian_week3_data_pipeline_spark.sources.tables import load_events
+    from yanwenxian_week3_data_pipeline_spark.sources.tables import load_table
 
     d = str(tmp_path_factory.mktemp("events_stream"))
-    ev = load_events(spark, sf_dir).select(
+    ev = load_table(spark, sf_dir, "events").select(
         "event_id", F.col("ts").cast("timestamp").alias("ts"), "user_id", "event_type", "value"
     )
     from yanwenxian_week3_data_pipeline_spark.streaming.jobs import JSON_TS_FORMAT
@@ -28,7 +28,7 @@ def stream_src(spark, sf_dir, tmp_path_factory):
 
 def test_tumbling_stream_matches_batch(spark, sf_dir, stream_src):
     from yanwenxian_week3_data_pipeline_spark.operators.sessionize import tumbling_window_agg
-    from yanwenxian_week3_data_pipeline_spark.sources.tables import load_events
+    from yanwenxian_week3_data_pipeline_spark.sources.tables import load_table
     from yanwenxian_week3_data_pipeline_spark.streaming.jobs import (
         run_available_now,
         tumbling_stream,
@@ -40,7 +40,7 @@ def test_tumbling_stream_matches_batch(spark, sf_dir, stream_src):
         for r in got.collect()
     }
 
-    batch = tumbling_window_agg(load_events(spark, sf_dir), "1 hour")
+    batch = tumbling_window_agg(load_table(spark, sf_dir, "events"), "1 hour")
     expected = {
         r.window_start: (r.n_events, round(float(r.sum_value), 6))
         for r in batch.collect()
@@ -64,7 +64,7 @@ def test_stateful_sessionize_matches_batch(spark, sf_dir, stream_src):
     emitted by the stateful operator must equal the batch sessionization
     minus each user's final (still-open) session."""
     from yanwenxian_week3_data_pipeline_spark.operators.sessionize import sessionize
-    from yanwenxian_week3_data_pipeline_spark.sources.tables import load_events
+    from yanwenxian_week3_data_pipeline_spark.sources.tables import load_table
     from yanwenxian_week3_data_pipeline_spark.streaming.jobs import (
         run_available_now,
         sessionize_stateful,
@@ -77,7 +77,7 @@ def test_stateful_sessionize_matches_batch(spark, sf_dir, stream_src):
         if r.closed
     }
 
-    batch = sessionize(load_events(spark, sf_dir), gap_minutes=30)
+    batch = sessionize(load_table(spark, sf_dir, "events"), gap_minutes=30)
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("user_id")
@@ -95,7 +95,7 @@ def test_stateful_sessionize_matches_batch(spark, sf_dir, stream_src):
 def test_dedup_stream_drops_redelivered_events(spark, sf_dir, tmp_path):
     """Feed every event twice (at-least-once redelivery); the streaming
     dedup must emit each event_id exactly once."""
-    from yanwenxian_week3_data_pipeline_spark.sources.tables import load_events
+    from yanwenxian_week3_data_pipeline_spark.sources.tables import load_table
     from yanwenxian_week3_data_pipeline_spark.streaming.jobs import (
         JSON_TS_FORMAT,
         dedup_stream,
@@ -103,7 +103,7 @@ def test_dedup_stream_drops_redelivered_events(spark, sf_dir, tmp_path):
     )
 
     d = str(tmp_path / "dup_events")
-    ev = load_events(spark, sf_dir).select(
+    ev = load_table(spark, sf_dir, "events").select(
         "event_id", F.col("ts").cast("timestamp").alias("ts"), "user_id", "event_type", "value"
     )
     ev.unionAll(ev).coalesce(2).write.mode("overwrite").option(
@@ -507,7 +507,7 @@ def test_tws_running_totals_matches_batch(spark, sf_dir, stream_src):
     (count, value sum, max ts). The RocksDB state store provider is required
     by the TWS operator; set for this query only and restored."""
     from pyspark.sql.window import Window
-    from yanwenxian_week3_data_pipeline_spark.sources.tables import load_events
+    from yanwenxian_week3_data_pipeline_spark.sources.tables import load_table
     from yanwenxian_week3_data_pipeline_spark.streaming.jobs import (
         run_available_now,
         running_totals_tws,
@@ -542,7 +542,7 @@ def test_tws_running_totals_matches_batch(spark, sf_dir, stream_src):
             spark.conf.set(key, original)
 
     batch = (
-        load_events(spark, sf_dir)
+        load_table(spark, sf_dir, "events")
         .groupBy("user_id")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -581,7 +581,7 @@ def test_chained_stateful_dedup_then_window_matches_batch(spark, sf_dir, tmp_pat
     windows the watermark has closed, so compare on the windows the stream
     finalized (all but the tail window at the max timestamp)."""
     from yanwenxian_week3_data_pipeline_spark.operators.sessionize import tumbling_window_agg
-    from yanwenxian_week3_data_pipeline_spark.sources.tables import load_events
+    from yanwenxian_week3_data_pipeline_spark.sources.tables import load_table
     from yanwenxian_week3_data_pipeline_spark.streaming.jobs import (
         JSON_TS_FORMAT,
         dedup_then_tumbling_stream,
@@ -589,7 +589,7 @@ def test_chained_stateful_dedup_then_window_matches_batch(spark, sf_dir, tmp_pat
     )
 
     d = str(tmp_path / "dup_feed")
-    ev = load_events(spark, sf_dir).select(
+    ev = load_table(spark, sf_dir, "events").select(
         "event_id", F.col("ts").cast("timestamp").alias("ts"), "user_id", "event_type", "value"
     )
     ev.unionAll(ev).coalesce(2).write.mode("overwrite").option(
@@ -604,7 +604,7 @@ def test_chained_stateful_dedup_then_window_matches_batch(spark, sf_dir, tmp_pat
         for r in got.collect()
     }
 
-    batch = tumbling_window_agg(load_events(spark, sf_dir), "1 hour")
+    batch = tumbling_window_agg(load_table(spark, sf_dir, "events"), "1 hour")
     expected = {
         r.window_start: (r.n_events, round(float(r.sum_value), 6))
         for r in batch.collect()

@@ -20,7 +20,7 @@ if [ -n "$(git status --porcelain)" ]; then
   exit 1
 fi
 echo "round gate: $(date -u +%FT%TZ) at commit $(git rev-parse --short HEAD)"
-python -m pytest tests/ -q
+python -m pytest tests/ -q -rs
 python tools/verify_all.py /root/testdata/sf0.01
 VERIFY_TZ=America/New_York python tools/verify_all.py /root/testdata/sf0.01
 python tools/plan_audit.py

@@ -77,29 +77,11 @@ MISSING_DATE_LITERALS: tuple[str, ...] = ("none", "null", "nan")
 # Verified identical on both engines (probe 2026-08-13).
 HASH64_HEX_CHARS = 15
 
-# MinHash configuration (dedup family). The env overrides exist ONLY for
-# guarded A/B experiments (fresh interpreter per variant; both the Spark
-# expressions and the DuckDB oracle derive from these names, so a variant
-# stays self-consistent) — production value is the default. r9 A/B of
-# 32/8x4 vs 16-hash variants: see operators/dedup.py docstring.
-import os as _os
-
-MINHASH_NUM_HASHES = int(_os.environ.get("YWX_MINHASH_NUM_HASHES", "32"))
-MINHASH_BANDS = int(_os.environ.get("YWX_MINHASH_BANDS", "8"))  # 8 bands x 4 rows
-
-# Overrides are refused outside an explicit experiment flag, and their
-# presence is exported so bench/verify output can record the active values —
-# a stray variable left over from an A/B shell must not silently change
-# production signatures or certify a contaminated gate (ADVICE r9).
-MINHASH_OVERRIDE_ACTIVE = bool(
-    _os.environ.get("YWX_MINHASH_NUM_HASHES") or _os.environ.get("YWX_MINHASH_BANDS")
-)
-if MINHASH_OVERRIDE_ACTIVE and _os.environ.get("YWX_MINHASH_EXPERIMENT") != "1":
-    raise RuntimeError(
-        "YWX_MINHASH_NUM_HASHES/YWX_MINHASH_BANDS are set without "
-        "YWX_MINHASH_EXPERIMENT=1 — refusing to run with non-default MinHash "
-        f"signatures (num_hashes={MINHASH_NUM_HASHES}, bands={MINHASH_BANDS})"
-    )
+# MinHash configuration (dedup family): 32 hashes in 8 bands x 4 rows. Both
+# the Spark expressions and the DuckDB oracle derive from these names. r9 A/B
+# of 32/8x4 vs 16-hash variants: see operators/dedup.py docstring.
+MINHASH_NUM_HASHES = 32
+MINHASH_BANDS = 8
 # A non-divisible combo would floor-truncate rows-per-band and silently drop
 # trailing hashes from banding.
 if MINHASH_NUM_HASHES % MINHASH_BANDS != 0:
@@ -256,20 +238,6 @@ MIX_HASH_SEED = 11
 WSAMPLE_K = 100
 WSAMPLE_SEED = 104729
 
-# size gates for the under-split-scan fan-out (sources/tables.py
-# read_parquet_fanout): fan out only when the map work over the scan can
-# pay for the extra shuffle. TEXT scans (documents) carry heavy per-byte
-# map work (tokenize, 32 md5s per shingle) — 2 MB suffices; relational
-# tables (lineitem etc.) do cheap columnar arithmetic per byte — 8 MB.
-# Below the gate the measured fan-out is a LOSS (round-4 sf0.1
-# measurement); above it, measured sf1 wins: q1 5.9→2.9 s, minhash
-# 14.1→7.4 s. At real cluster scale scans have ≥ cores splits and the
-# fan-out self-disables.
-SCAN_FANOUT_TEXT_MIN_BYTES = 2 << 20
-# suffix-grain queries (docs_lrs_*) multiply map work by LRS_CAP (~30x),
-# so their fan-out pays at ~30x smaller inputs than the plain-text gate
-SCAN_FANOUT_SUFFIX_MIN_BYTES = 256 << 10
-SCAN_FANOUT_TABLE_MIN_BYTES = 8 << 20
 # stratified variant: independent per-source sample size
 WSAMPLE_PER_SOURCE_K = 5
 

@@ -273,10 +273,10 @@ def dedup_minhash_lsh(
 
     r9 — FLOOR DECLARED after the last open variant was tried: lowering
     MINHASH_NUM_HASHES 32→16 (both 8×2 and 4×4 band shapes, fresh
-    interpreter per variant via the YWX_MINHASH_* env knobs, two session
-    rounds each at sf0.1) was a wall-time WASH (round 1: 3.46/3.29/3.23 s
-    for 32-8×4/16-8×2/16-4×4; round 2 INVERTED the ordering: 3.17/3.26 s
-    with the 16-4×4 session load-contaminated) and a measured RECALL LOSS
+    interpreter per variant, two session rounds each at sf0.1) was a
+    wall-time WASH (round 1: 3.46/3.29/3.23 s for 32-8×4/16-8×2/16-4×4;
+    round 2 INVERTED the ordering: 3.17/3.26 s with the 16-4×4 session
+    load-contaminated) and a measured RECALL LOSS
     against exact ground truth (dedup_minhash_recall: 0.9961 → 0.9883,
     1 → 3 of 256 true pairs missed at sf0.1). A quality regression for no
     reliable speed win; the ~2.3–2.6 s sf0.1 floor stands on evidence.
@@ -572,7 +572,7 @@ def dedup_containment(
     id_col: str,
     threshold: float,
     max_df: int,
-    small_hint=F.broadcast,
+    small_hint=lambda side: side,
 ) -> DataFrame:
     """Containment near-duplicate pairs: containment(A, B) =
     |shingles(A) ∩ shingles(B)| / min(|A|, |B|) — catches SUBSET
@@ -622,9 +622,10 @@ def dedup_containment(
     ``small_hint`` wraps the per-doc size table and the common-shingle
     slice (both far smaller than the corpus, but SF-scaling): callers
     with a size gate pass it (plans layer: ``_gated_dim``) so the hint
-    degrades to a shuffled join past the broadcast budget; the default
-    broadcasts, which is right for bounded inputs. The 1-row c_tot
-    scalar stays unconditionally broadcast.
+    degrades to a shuffled join past the broadcast budget. The default
+    adds no hint, so a direct caller never broadcasts a corpus-sized side;
+    AQE still broadcasts a side that turns out small at runtime. The 1-row
+    c_tot scalar stays unconditionally broadcast.
 
     r11 negative result — PPJoin-style positional prefix filtering of
     the candidate self-join was instrumented and REJECTED (do not retry
@@ -636,7 +637,7 @@ def dedup_containment(
     while forfeiting the exact n_rare the full self-join's groupBy
     produces for free, forcing a recount join for ~466 k pairs that
     costs more than the emission it saves. Numbers + lemma:
-    tools/prefix_filter_counts.py.
+    tools/prefix_filter_counts.py (in git history).
     """
     sh = doc_shingles(df, text_col, id_col)
     posts = sh.select("id", F.explode("shingles").alias("s"))

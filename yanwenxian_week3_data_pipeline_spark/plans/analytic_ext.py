@@ -27,9 +27,7 @@ from pyspark.sql.window import Window
 
 from ..functions.hashing import hash60_expr, hash60_sql
 from . import QuerySpec
-from .relational import _t_shuffle_input
-from ..constants import SCAN_FANOUT_TABLE_MIN_BYTES
-from ..sources.tables import read_parquet_fanout
+from ..sources.tables import SCAN_FANOUT_TABLE_MIN_BYTES, load_table
 
 DEC = "decimal(18,2)"
 # Moment sums: inputs cast to (25,6). Width >19 forces DuckDB's product
@@ -38,13 +36,6 @@ DEC = "decimal(18,2)"
 # (precision-loss scale adjustment). Both are exact for these inputs (true
 # product scale ≤ 4), so the double casts downstream are bit-identical.
 DEC6 = "decimal(25,6)"
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # size-gated under-split-scan fan-out (sources/tables.py)
-    return read_parquet_fanout(
-        spark, f"{sf_dir}/{name}.parquet", SCAN_FANOUT_TABLE_MIN_BYTES
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -80,7 +71,7 @@ _SQL_GROUPING_SETS = _GROUPING_SETS_SQL.format(orders="orders")
 # ---------------------------------------------------------------------------
 
 def _q_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem", SCAN_FANOUT_TABLE_MIN_BYTES)
     q = F.col("l_quantity")
     return (
         li.groupBy("l_returnflag")
@@ -112,7 +103,7 @@ FROM lineitem GROUP BY l_returnflag
 # ---------------------------------------------------------------------------
 
 def _q_stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem", SCAN_FANOUT_TABLE_MIN_BYTES)
     x = F.col("l_quantity").cast(DEC6)
     y = F.col("l_extendedprice").cast(DEC6)
     sums = li.groupBy("l_returnflag").agg(
@@ -175,7 +166,7 @@ _STATUSES = ["F", "O", "P"]
 
 
 def _q_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders", SCAN_FANOUT_TABLE_MIN_BYTES)
     piv = (
         orders.groupBy("o_orderpriority")
         .pivot("o_orderstatus", _STATUSES)
@@ -202,7 +193,7 @@ FROM orders GROUP BY o_orderpriority
 # ---------------------------------------------------------------------------
 
 def _q_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem", SCAN_FANOUT_TABLE_MIN_BYTES)
     long = li.unpivot(
         ids=["l_returnflag"],
         values=["l_extendedprice", "l_discount", "l_tax"],
@@ -234,7 +225,7 @@ FROM long GROUP BY l_returnflag, measure
 # ---------------------------------------------------------------------------
 
 def _q_sample_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders", SCAN_FANOUT_TABLE_MIN_BYTES)
     keep = (hash60_expr(F.col("o_orderkey").cast("string")) % 100) < 5
     return (
         orders.where(keep)
@@ -314,7 +305,7 @@ _SQL_SCALAR_SUBQ = _SCALAR_SQL.format(orders="orders", dec=DEC)
 # ---------------------------------------------------------------------------
 
 def _q_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
+    cust = load_table(spark, sf_dir, "customer", SCAN_FANOUT_TABLE_MIN_BYTES)
     w = Window.partitionBy("c_mktsegment").orderBy("c_acctbal", "c_custkey")
     return (
         cust.withColumn("quartile", F.ntile(4).over(w))
@@ -373,7 +364,7 @@ FROM (
 def _q_rolling_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
     # first consumer is the o_custkey window shuffle — plain loader
     # (r9 window_topk A/B evidence: same shape, plain won at sf1)
-    orders = _t_shuffle_input(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     w = (
         Window.partitionBy("o_custkey")
         # epoch seconds via pure NTZ arithmetic (timestampdiff from the NTZ
@@ -417,10 +408,10 @@ WINDOW w AS (
 # ---------------------------------------------------------------------------
 
 def _q_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer").groupBy("c_nationkey").agg(
+    cust = load_table(spark, sf_dir, "customer", SCAN_FANOUT_TABLE_MIN_BYTES).groupBy("c_nationkey").agg(
         F.count(F.lit(1)).alias("n_customers")
     )
-    supp = _t(spark, sf_dir, "supplier").groupBy("s_nationkey").agg(
+    supp = load_table(spark, sf_dir, "supplier", SCAN_FANOUT_TABLE_MIN_BYTES).groupBy("s_nationkey").agg(
         F.count(F.lit(1)).alias("n_suppliers")
     )
     joined = cust.join(supp, cust.c_nationkey == supp.s_nationkey, "full_outer")
@@ -448,9 +439,8 @@ FROM c FULL OUTER JOIN s ON c_nationkey = s_nationkey
 
 def _q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.rangejoin import point_in_interval_join
-    from ..sources.tables import load_events
 
-    ev = load_events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     purchases = ev.where(F.col("event_type") == "purchase").select(
         F.col("user_id"),
         F.col("event_id").alias("purchase_id"),
@@ -497,9 +487,8 @@ GROUP BY p.user_id, p.event_id
 
 def _q_salted_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.salt import salted_agg
-    from ..sources.tables import load_events
 
-    ev = load_events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     return salted_agg(
         ev.select("event_type", F.col("value").cast(DEC6).alias("value")),
         keys=["event_type"],
@@ -529,10 +518,9 @@ FROM events GROUP BY event_type
 
 def _q_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.salt import salted_join
-    from ..sources.tables import load_events
 
-    ev = load_events(spark, sf_dir).select("user_id", F.col("value").cast(DEC6).alias("value"))
-    dim = _t(spark, sf_dir, "customer").select(
+    ev = load_table(spark, sf_dir, "events").select("user_id", F.col("value").cast(DEC6).alias("value"))
+    dim = load_table(spark, sf_dir, "customer", SCAN_FANOUT_TABLE_MIN_BYTES).select(
         F.col("c_custkey").alias("user_id"), "c_nationkey"
     )
     return (
@@ -567,12 +555,12 @@ def _q_auto_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     hot = F.when(F.col("l_orderkey") % 2 == 0, F.lit(0)).otherwise(F.col("l_orderkey"))
     # both facts feed key shuffles after trivial projections — plain loaders
-    fact = _t_shuffle_input(spark, sf_dir, "lineitem").select(
+    fact = load_table(spark, sf_dir, "lineitem").select(
         hot.alias("jk"), F.col("l_extendedprice").cast(DEC6).alias("price")
     )
     dim_key = F.when(F.col("o_orderkey") % 2 == 0, F.lit(0)).otherwise(F.col("o_orderkey"))
     dim = (
-        _t_shuffle_input(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .select(dim_key.alias("jk"))
         .distinct()
         .withColumn("bucket", F.pmod(F.col("jk"), F.lit(10)))
@@ -618,7 +606,8 @@ _PROFILE_COLS = (
 def _q_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.profile import profile_table
 
-    return profile_table(_t(spark, sf_dir, "lineitem"), list(_PROFILE_COLS))
+    li = load_table(spark, sf_dir, "lineitem", SCAN_FANOUT_TABLE_MIN_BYTES)
+    return profile_table(li, list(_PROFILE_COLS))
 
 
 def _profile_branch_sql(c: str) -> str:
@@ -644,7 +633,7 @@ _SQL_PROFILE = " UNION ALL ".join(_profile_branch_sql(c) for c in _PROFILE_COLS)
 # ---------------------------------------------------------------------------
 
 def _q_hll_union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
+    cust = load_table(spark, sf_dir, "customer", SCAN_FANOUT_TABLE_MIN_BYTES)
     per_nation = cust.groupBy("c_nationkey").agg(
         F.hll_sketch_agg("c_custkey").alias("sk"),
         F.count(F.lit(1)).alias("n_rows"),
@@ -676,9 +665,7 @@ def _q_hll_union(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def _q_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.tables import load_events
-
-    ev = load_events(spark, sf_dir).select("user_id", F.to_date("ts").alias("d"))
+    ev = load_table(spark, sf_dir, "events").select("user_id", F.to_date("ts").alias("d"))
     first_seen = ev.groupBy("user_id").agg(F.min("d").alias("first_d"))
     return (
         ev.join(F.broadcast(first_seen), "user_id")
@@ -718,9 +705,7 @@ ORDER BY cohort_week, weeks_since
 # ---------------------------------------------------------------------------
 
 def _q_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.tables import load_events
-
-    ev = load_events(spark, sf_dir).select("user_id", "event_type", "ts")
+    ev = load_table(spark, sf_dir, "events").select("user_id", "event_type", "ts")
     w = (
         Window.partitionBy("user_id")
         .orderBy("ts")
@@ -792,7 +777,7 @@ FROM per_user
 # ---------------------------------------------------------------------------
 
 def _q_kll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders", SCAN_FANOUT_TABLE_MIN_BYTES)
     per_group = orders.groupBy("o_orderpriority").agg(
         F.kll_sketch_agg_double("o_totalprice").alias("sk"),
         F.count(F.lit(1)).alias("n_rows"),
@@ -879,9 +864,7 @@ def _hour_ntz(c: F.Column) -> F.Column:
 
 
 def _q_gapfill_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.tables import load_events
-
-    e = load_events(spark, sf_dir)
+    e = load_table(spark, sf_dir, "events")
     hourly = e.groupBy(_hour_ntz(F.col("ts")).alias("h")).agg(
         F.count(F.lit(1)).alias("n_events"),
         F.sum(F.col("value").cast(DEC)).alias("sum_value"),
@@ -1007,7 +990,7 @@ HH_K = 10
 def _q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
-    ev = _t(spark, sf_dir, "events").select("event_type")
+    ev = load_table(spark, sf_dir, "events", SCAN_FANOUT_TABLE_MIN_BYTES).select("event_type")
 
     def mg_partition(batches):
         counters: dict[str, int] = {}
@@ -1088,9 +1071,7 @@ FROM c, t WHERE n_occurrences * {HH_K} > n
 # ---------------------------------------------------------------------------
 
 def _q_sliding_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.tables import load_events
-
-    ev = load_events(spark, sf_dir).where(F.col("user_id").isNotNull())
+    ev = load_table(spark, sf_dir, "events").where(F.col("user_id").isNotNull())
     return (
         ev.select(F.window("ts", "15 minutes", "5 minutes").alias("w"), "user_id")
         .groupBy(F.col("w.start").alias("window_start"))
@@ -1128,7 +1109,7 @@ def _q_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the distinct's partial dedup barely reduces (near-unique pairs), so the
     # first consumer is effectively a raw key shuffle — plain loader (r10
     # q18 A/B: the no-reduction partial-agg class loses 31% to the fan-out)
-    li = _t_shuffle_input(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
     a, b = li.alias("a"), li.alias("b")
     return (
         a.join(
@@ -1168,9 +1149,7 @@ LIMIT 20
 # ---------------------------------------------------------------------------
 
 def _q_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.tables import load_events
-
-    ev = load_events(spark, sf_dir).where(
+    ev = load_table(spark, sf_dir, "events").where(
         F.col("event_type").isNotNull() & F.col("user_id").isNotNull()
     )
     m = ev.select("event_type", "user_id").distinct()
@@ -1232,9 +1211,7 @@ JOIN sizes sb ON sb.event_type = type_b
 # ---------------------------------------------------------------------------
 
 def _q_null_safe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.tables import load_events
-
-    ev = load_events(spark, sf_dir).select(
+    ev = load_table(spark, sf_dir, "events").select(
         F.when(F.col("event_type") == "error", F.lit(None))
         .otherwise(F.col("event_type"))
         .alias("k"),
@@ -1275,8 +1252,8 @@ FROM l JOIN r ON l.k IS NOT DISTINCT FROM r.k
 
 def _q_hint_shuffle_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both facts feed the hinted shuffle-hash join directly — plain loaders
-    li = _t_shuffle_input(spark, sf_dir, "lineitem")
-    orders = _t_shuffle_input(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
     return (
         li.join(orders.hint("SHUFFLE_HASH"), li.l_orderkey == orders.o_orderkey)
         .groupBy("o_orderpriority")
@@ -1306,9 +1283,7 @@ _TREND_X_EXPR = f"timestampdiff(SECOND, TIMESTAMP_NTZ '2024-01-01 00:00:00', ts)
 
 
 def _user_trend_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.tables import load_events
-
-    e = load_events(spark, sf_dir).where(
+    e = load_table(spark, sf_dir, "events").where(
         F.col("user_id").isNotNull() & F.col("ts").isNotNull() & F.col("value").isNotNull()
     )
     x = F.expr(_TREND_X_EXPR).cast("long").alias("x")
@@ -1358,9 +1333,7 @@ def _q_user_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_user_trend_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
-    from ..sources.tables import load_events
-
-    e = load_events(spark, sf_dir).where(
+    e = load_table(spark, sf_dir, "events").where(
         F.col("user_id").isNotNull() & F.col("ts").isNotNull() & F.col("value").isNotNull()
     )
     grouped = e.select(
@@ -1447,9 +1420,7 @@ _DECAY_HALFLIFE_S = 86400.0
 
 
 def _q_decayed_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.tables import load_events
-
-    ev = load_events(spark, sf_dir).where(F.col("event_type").isNotNull())
+    ev = load_table(spark, sf_dir, "events").where(F.col("event_type").isNotNull())
     ref = ev.agg(F.max("ts").alias("ref"))
     # MICROsecond grain: second-grain timestampdiff TRUNCATES the
     # fractional part while DuckDB's date_diff counts boundary crossings
@@ -1516,7 +1487,7 @@ def _q_basket_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one order would otherwise inflate every pair/triple count (r4 bug —
     # counts were line combinations, not order support). Pinned by the
     # independent pure-Python recount in tests/test_analytic_new.py.
-    li = _t_shuffle_input(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
     a, b, c = li.alias("a"), li.alias("b"), li.alias("c")
     pairs = (
         a.join(
@@ -1623,7 +1594,7 @@ _CF_NEIGHBORS = 5
 
 
 def _q_item_item_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t_shuffle_input(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
     a, b = li.alias("a"), li.alias("b")
     pairs = (
         a.join(
@@ -1714,9 +1685,7 @@ WHERE rank <= {_CF_NEIGHBORS}
 # ---------------------------------------------------------------------------
 
 def _q_hll_rollup_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.tables import load_events
-
-    ev = load_events(spark, sf_dir).where(F.col("user_id").isNotNull())
+    ev = load_table(spark, sf_dir, "events").where(F.col("user_id").isNotNull())
     week = F.date_trunc("week", F.to_date("ts")).cast("timestamp_ntz")
     daily = ev.groupBy(
         week.alias("week"), F.to_date("ts").alias("day")
@@ -1770,9 +1739,7 @@ FUNNEL_DEADLINE_MIN = 60
 
 
 def _q_funnel_timed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.tables import load_events
-
-    ev = load_events(spark, sf_dir).select("user_id", "event_type", "ts")
+    ev = load_table(spark, sf_dir, "events").select("user_id", "event_type", "ts")
     w = (
         Window.partitionBy("user_id")
         .orderBy("ts")
@@ -1857,9 +1824,7 @@ OOO_GAP_MIN = 10
 
 
 def _q_out_of_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.tables import load_events
-
-    ev = load_events(spark, sf_dir).where(F.col("user_id").isNotNull())
+    ev = load_table(spark, sf_dir, "events").where(F.col("user_id").isNotNull())
     w = (
         Window.partitionBy("user_id")
         .orderBy("event_id")
@@ -1923,9 +1888,7 @@ FROM d GROUP BY user_id ORDER BY user_id
 def _transition_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(user_id, event_type, next_type) — one row per consecutive event
     pair within a user's stream, ordered by (ts, event_id)."""
-    from ..sources.tables import load_events
-
-    ev = load_events(spark, sf_dir).select("user_id", "ts", "event_id", "event_type")
+    ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "event_id", "event_type")
     w = Window.partitionBy("user_id").orderBy(F.col("ts").asc(), F.col("event_id").asc())
     return (
         ev.withColumn("next_type", F.lead("event_type").over(w))
@@ -1996,7 +1959,6 @@ def _q_markov_transitions_streamed(spark: SparkSession, sf_dir: str) -> DataFram
     import shutil
     import tempfile
 
-    from ..sources.tables import load_events
     from ..streaming.jobs import (
         JSON_TS_FORMAT,
         run_available_now,
@@ -2005,7 +1967,7 @@ def _q_markov_transitions_streamed(spark: SparkSession, sf_dir: str) -> DataFram
 
     src = tempfile.mkdtemp(prefix="ywx_markov_stream_")
     try:
-        ev = load_events(spark, sf_dir).select(
+        ev = load_table(spark, sf_dir, "events").select(
             "event_id",
             F.col("ts").cast("timestamp").alias("ts"),
             "user_id",
@@ -2150,9 +2112,8 @@ RFM_FRACTIONS = [(1, 5), (2, 5), (3, 5), (4, 5)]
 
 def _q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.quantiles import exact_rank_cuts
-    from ..sources.tables import load_events
 
-    ev = load_events(spark, sf_dir).select(
+    ev = load_table(spark, sf_dir, "events").select(
         "user_id", "ts", F.col("value").cast(DEC6).alias("v")
     )
     pu = ev.groupBy("user_id").agg(
@@ -2262,9 +2223,7 @@ ATTR_WINDOW_DAYS = 7
 
 
 def _q_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.tables import load_events
-
-    ev = load_events(spark, sf_dir).select(
+    ev = load_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type", F.col("value").cast(DEC6).alias("v")
     )
     w = (
@@ -2339,9 +2298,7 @@ PATH_TOPK = 15
 
 
 def _q_top_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.tables import load_events
-
-    ev = load_events(spark, sf_dir).select("user_id", "ts", "event_id", "event_type")
+    ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "event_id", "event_type")
     wseq = Window.partitionBy("user_id").orderBy(F.col("ts").asc(), F.col("event_id").asc())
     # INTERVAL comparison on the NTZ column (the sessionize operator's
     # recipe — TIMESTAMP_NTZ has no long cast); a NULL lag (first event)

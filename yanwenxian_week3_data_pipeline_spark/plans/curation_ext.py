@@ -68,23 +68,9 @@ from ..functions.textstats import (
 )
 from . import QuerySpec
 from .documents_domain import CLEAN_SQL
-from ..constants import SCAN_FANOUT_TEXT_MIN_BYTES
-from ..sources.tables import read_parquet_fanout
+from ..sources.tables import SCAN_FANOUT_TEXT_MIN_BYTES, load_table
 
 _CLEANED = f"SELECT doc_id, {CLEAN_SQL} AS c FROM documents"
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # size-gated under-split-scan fan-out: the signature/tokenize map work
-    # over a one-split documents file serializes on one core without it
-    # (sources/tables.py; no-op at sf0.01 test scale and at multi-split scale)
-    return read_parquet_fanout(
-        spark, f"{sf_dir}/documents.parquet", SCAN_FANOUT_TEXT_MIN_BYTES
-    )
-
-
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
 # ---------------------------------------------------------------------------
@@ -99,7 +85,7 @@ def _q_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     all-vectors-per-label list — the explode keeps state per (label, dim)
     cell, so a 4096-dim embedding over billions of rows aggregates into
     n_labels × 4096 cells regardless of corpus size."""
-    e = _emb(spark, sf_dir)
+    e = load_table(spark, sf_dir, "embeddings")
     ex = e.select("label", F.posexplode("embedding").alias("pos", "v"))
     sums = ex.groupBy("label", "pos").agg(
         F.sum(F.col("v").cast("double").cast("decimal(25,10)")).alias("sd"),
@@ -194,10 +180,11 @@ def _winnow_fps_table(d: DataFrame) -> DataFrame:
     is an interpreted O(n·w) array_min-over-slices HOF per document —
     Catalyst does not codegen higher-order-function lambdas — and it
     dominated the committed wall. Measured interleaved ×6, results
-    bit-identical (tools/proto_winnow_arrow.py): sf0.1 2.628 → 0.384 s
-    (−85 %), sf1 8.227 → 1.640 s (−80 %). Tokenization stays a Spark
-    expression so cleaning is shared with every other text operator; the
-    transfer in is (doc_id, toks) only, out is two longs per fingerprint.
+    bit-identical (tools/proto_winnow_arrow.py, in git history): sf0.1
+    2.628 → 0.384 s (−85 %), sf1 8.227 → 1.640 s (−80 %). Tokenization
+    stays a Spark expression so cleaning is shared with every other text
+    operator; the transfer in is (doc_id, toks) only, out is two longs per
+    fingerprint.
     """
     import hashlib
 
@@ -253,7 +240,8 @@ def _q_winnowing_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     are not deduped by exchange reuse (the r6 lesson), so it is
     checkpointed once — two narrow longs per fingerprint, ~1/w of the
     gram count (the minhash sigs precedent)."""
-    e = _winnow_fps_table(_docs(spark, sf_dir)).localCheckpoint(eager=True)
+    d = load_table(spark, sf_dir, "documents", SCAN_FANOUT_TEXT_MIN_BYTES)
+    e = _winnow_fps_table(d).localCheckpoint(eager=True)
     ok = e.groupBy("fp").count().where(F.col("count") <= DEDUP_MAX_BUCKET).drop("count")
     e = e.join(ok, "fp", "left_semi")
     pairs = (
@@ -310,7 +298,7 @@ def _q_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket open-ended) and the within-language share. One shuffle on the
     low-cardinality (lang, bucket) key; the share window repartitions only
     the tiny histogram table."""
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents", SCAN_FANOUT_TEXT_MIN_BYTES)
     bucket = F.least(
         F.floor(F.col("n_chars") / HIST_BUCKET_WIDTH),
         F.lit(HIST_NUM_BUCKETS - 1),
@@ -356,7 +344,7 @@ def _q_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the superset invariant (bloom never misses an exact hit)."""
     from .llm_ops import _word_grams
 
-    d = _docs(spark, sf_dir).select(
+    d = load_table(spark, sf_dir, "documents", SCAN_FANOUT_TEXT_MIN_BYTES).select(
         "doc_id", clean_text_expr(F.col("text")).alias("c")
     )
     grams = F.array_distinct(
@@ -491,9 +479,7 @@ FUZZY_MAX_DISTANCE = 3
 
 
 def _q_fuzzy_part_names(spark: SparkSession, sf_dir: str) -> DataFrame:
-    names = (
-        spark.read.parquet(f"{sf_dir}/part.parquet").select("p_name").distinct()
-    )
+    names = load_table(spark, sf_dir, "part").select("p_name").distinct()
     grams = F.array_distinct(
         F.transform(
             F.sequence(F.lit(1), F.length("p_name") - 2),
@@ -556,7 +542,7 @@ VOCAB_TOPK = 30
 
 
 def _q_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents", SCAN_FANOUT_TEXT_MIN_BYTES)
     toks = d.select(
         F.explode(tokens_expr(clean_text_expr(F.col("text")))).alias("tok")
     )
@@ -622,7 +608,7 @@ FROM r WHERE rank <= {VOCAB_TOPK}
 def _q_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.quantiles import exact_rank_cuts
 
-    d = _docs(spark, sf_dir).select("doc_id", "n_chars")
+    d = load_table(spark, sf_dir, "documents", SCAN_FANOUT_TEXT_MIN_BYTES).select("doc_id", "n_chars")
     cuts = exact_rank_cuts(
         d, "n_chars", [(i, 10) for i in range(1, 10)]
     ).select(F.col("cut"))
@@ -697,7 +683,7 @@ def _q_median_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     size_udaf = pandas_udf(_size, "long")
 
     return (
-        _docs(spark, sf_dir)
+        load_table(spark, sf_dir, "documents", SCAN_FANOUT_TEXT_MIN_BYTES)
         .groupBy("lang")
         .agg(
             size_udaf("n_chars").alias("n_docs"),
@@ -735,7 +721,7 @@ MIX_TEMP_BUDGET = 0.5  # fraction of total corpus chars to keep
 def _q_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..constants import MIX_BUCKETS, MIX_HASH_SEED
 
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents", SCAN_FANOUT_TEXT_MIN_BYTES)
     s = d.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"), F.sum("n_chars").alias("chars")
     )
@@ -831,7 +817,7 @@ FROM th LEFT JOIN k ON th.source = k.source
 
 
 def _q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir).select(
+    d = load_table(spark, sf_dir, "documents", SCAN_FANOUT_TEXT_MIN_BYTES).select(
         "doc_id", clean_text_expr(F.col("text")).alias("c")
     )
     q = quality_features_expr(F.col("c"))["quality_score"]
@@ -887,7 +873,7 @@ ORDER BY es_key DESC, doc_id ASC LIMIT {WSAMPLE_K}
 
 
 def _q_weighted_sample_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir).select(
+    d = load_table(spark, sf_dir, "documents", SCAN_FANOUT_TEXT_MIN_BYTES).select(
         "doc_id", "source", clean_text_expr(F.col("text")).alias("c")
     )
     q = quality_features_expr(F.col("c"))["quality_score"]
@@ -964,7 +950,7 @@ ORDER BY source, sample_rank
 
 def _q_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     b_lit = F.lit(DSIR_BUCKETS)
-    d = _docs(spark, sf_dir).select(
+    d = load_table(spark, sf_dir, "documents", SCAN_FANOUT_TEXT_MIN_BYTES).select(
         "doc_id", "lang", clean_text_expr(F.col("text")).alias("c")
     )
     tk = tokens_expr(F.col("c"))
@@ -1094,7 +1080,7 @@ BUDGET_DEN = 2  # budget = total_tokens div 2
 
 
 def _q_token_budget_waterfill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir).select(
+    d = load_table(spark, sf_dir, "documents", SCAN_FANOUT_TEXT_MIN_BYTES).select(
         "source", clean_text_expr(F.col("text")).alias("c")
     )
     per = (
@@ -1173,7 +1159,7 @@ SPLIT_VAL_DEN = 10  # val = n div 10 per stratum
 
 
 def _q_stratified_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir).select("doc_id", "lang", "source")
+    d = load_table(spark, sf_dir, "documents", SCAN_FANOUT_TEXT_MIN_BYTES).select("doc_id", "lang", "source")
     w = Window.partitionBy("lang", "source").orderBy(
         hash52_expr(F.col("doc_id").cast("string")).asc(), F.col("doc_id").asc()
     )
@@ -1226,7 +1212,7 @@ FROM r GROUP BY lang, source ORDER BY lang, source
 # ---------------------------------------------------------------------------
 
 def _q_int8_quant_error(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _emb(spark, sf_dir).select(
+    e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", F.posexplode("embedding").alias("pos", "xf")
     ).select("vec_id", "label", "pos", F.col("xf").cast("double").alias("x"))
     cb = e.groupBy("pos").agg(F.min("x").alias("mn"), F.max("x").alias("mx"))
@@ -1298,7 +1284,7 @@ KM_ROUNDS = 3
 def _q_kmeans_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.kmeans_exact import kmeans_exact
 
-    return kmeans_exact(_emb(spark, sf_dir), KM_K, KM_ROUNDS)
+    return kmeans_exact(load_table(spark, sf_dir, "embeddings"), KM_K, KM_ROUNDS)
 
 
 def _sql_kmeans_exact() -> str:
@@ -1323,7 +1309,7 @@ def _q_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..constants import REP_DUP_FRAC_MAX, REP_NGRAM
     from ..operators.dedup import shingles_from_text_expr
 
-    d = _docs(spark, sf_dir).select(
+    d = load_table(spark, sf_dir, "documents", SCAN_FANOUT_TEXT_MIN_BYTES).select(
         "lang",
         token_count_expr(clean_text_expr(F.col("text"))).alias("nt"),
         F.size(shingles_from_text_expr(F.col("text"), REP_NGRAM))
@@ -1409,7 +1395,7 @@ BEST_JUNK_TAIL = " 000 111 222 333 444"
 
 
 def _q_best_of_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = _docs(spark, sf_dir).select("doc_id", "text")
+    base = load_table(spark, sf_dir, "documents", SCAN_FANOUT_TEXT_MIN_BYTES).select("doc_id", "text")
     degraded = base.where(F.col("doc_id") % 7 == 0).select(
         (F.col("doc_id") + BEST_COPY_OFFSET).alias("doc_id"),
         F.concat(F.col("text"), F.lit(BEST_JUNK_TAIL)).alias("text"),
@@ -1471,7 +1457,10 @@ FROM r WHERE rn = 1
 def _q_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..constants import ZIPF_LN_SCALE, ZIPF_TOP_K
 
-    d = _docs(spark, sf_dir).select(clean_text_expr(F.col("text")).alias("c"))
+    d = (
+        load_table(spark, sf_dir, "documents", SCAN_FANOUT_TEXT_MIN_BYTES)
+        .select(clean_text_expr(F.col("text")).alias("c"))
+    )
     freq = (
         d.select(F.explode(tokens_expr(F.col("c"))).alias("tok"))
         .groupBy("tok")
@@ -1551,7 +1540,7 @@ def _q_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.textstats import bpe_piece_count_expr
 
     c = clean_text_expr(F.col("text"))
-    d = _docs(spark, sf_dir).select(
+    d = load_table(spark, sf_dir, "documents", SCAN_FANOUT_TEXT_MIN_BYTES).select(
         "lang",
         token_count_expr(c).alias("nt"),
         bpe_piece_count_expr(c).alias("np"),
@@ -1616,7 +1605,7 @@ NOVELTY_NGRAM = 5
 
 
 def _q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir).select(
+    d = load_table(spark, sf_dir, "documents", SCAN_FANOUT_TEXT_MIN_BYTES).select(
         "doc_id", "source", clean_text_expr(F.col("text")).alias("c")
     )
     toks = tokens_expr(F.col("c"))
@@ -1700,7 +1689,7 @@ FROM per_doc GROUP BY source
 
 
 def _q_source_lang_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir).select("source", "lang").where(
+    d = load_table(spark, sf_dir, "documents", SCAN_FANOUT_TEXT_MIN_BYTES).select("source", "lang").where(
         F.col("lang").isNotNull() & F.col("source").isNotNull()
     )  # KL is over the labeled mass; NULL keys would silently drop at the joins
     cell = d.groupBy("source", "lang").agg(F.count(F.lit(1)).alias("c_sl"))
@@ -1776,7 +1765,7 @@ def _q_centroid_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.kmeans_exact import quantize_expr
 
     ex = (
-        _emb(spark, sf_dir)
+        load_table(spark, sf_dir, "embeddings")
         .select("vec_id", "label", F.posexplode(quantize_expr(F.col("embedding"))).alias("pos", "q"))
     )
     cen = ex.groupBy("label", "pos").agg(
@@ -1851,7 +1840,7 @@ def _q_distinctive_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.text import clean_text_expr
     from ..functions.textstats import tokens_expr
 
-    d = _docs(spark, sf_dir).select(
+    d = load_table(spark, sf_dir, "documents", SCAN_FANOUT_TEXT_MIN_BYTES).select(
         "source", clean_text_expr(F.col("text")).alias("c")
     )
     st = d.select("source", F.explode(tokens_expr(F.col("c"))).alias("term"))
@@ -1920,7 +1909,7 @@ PCA_ROUNDS = 4
 def _q_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.pca_power import pca_top_component
 
-    return pca_top_component(_emb(spark, sf_dir), rounds=PCA_ROUNDS)
+    return pca_top_component(load_table(spark, sf_dir, "embeddings"), rounds=PCA_ROUNDS)
 
 
 def _sql_pca_power() -> str:
@@ -1932,7 +1921,7 @@ def _sql_pca_power() -> str:
 def _q_pca_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.pca_power import pca_variance_explained
 
-    return pca_variance_explained(_emb(spark, sf_dir), rounds=PCA_ROUNDS)
+    return pca_variance_explained(load_table(spark, sf_dir, "embeddings"), rounds=PCA_ROUNDS)
 
 
 def _sql_pca_variance() -> str:

@@ -25,29 +25,26 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import QuerySpec
-from .relational import _t_shuffle_input
-from ..constants import KCORE_K, KCORE_ROUNDS, SCAN_FANOUT_TABLE_MIN_BYTES
+from ..constants import KCORE_K, KCORE_ROUNDS
 from ..operators.pagerank import pagerank, pagerank_oracle_sql
-from ..sources.tables import read_parquet_fanout
+from ..sources.tables import SCAN_FANOUT_TABLE_MIN_BYTES, load_table
 
 _PR_ITERS = 10
 _PR_TOPK = 40
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return read_parquet_fanout(
-        spark, f"{sf_dir}/{name}.parquet", SCAN_FANOUT_TABLE_MIN_BYTES
-    )
-
-
 def _purchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # KEEPS the fan-out: the _t_shuffle_input rule nominates these (first
-    # consumer is the l_orderkey join) but the r10 interleaved A/B at sf1
-    # was a wash (fanout 12.561 vs plain 12.652 s median) — pagerank's wall
-    # is the 10-round recurrence, not the edge build. Unchanged to keep the
-    # pin history comparable; do not re-litigate without new evidence.
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    # KEEPS the fan-out: the shuffle-input rule (sources/tables.py)
+    # nominates these (first consumer is the l_orderkey join) but the r10
+    # interleaved A/B at sf1 was a wash (fanout 12.561 vs plain 12.652 s
+    # median) — pagerank's wall is the 10-round recurrence, not the edge
+    # build. Unchanged to keep the pin history comparable; do not
+    # re-litigate without new evidence.
+    li = load_table(spark, sf_dir, "lineitem", SCAN_FANOUT_TABLE_MIN_BYTES).select("l_orderkey", "l_suppkey")
+    orders = (
+        load_table(spark, sf_dir, "orders", SCAN_FANOUT_TABLE_MIN_BYTES)
+        .select("o_orderkey", "o_custkey")
+    )
     return li.join(orders, li["l_orderkey"] == orders["o_orderkey"]).select(
         (F.col("o_custkey") * 2).alias("src"),
         (F.col("l_suppkey") * 2 + 1).alias("dst"),
@@ -92,7 +89,7 @@ _PPR_TOPK = 20
 
 def _q_ppr_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     seeds = (
-        _t(spark, sf_dir, "customer")
+        load_table(spark, sf_dir, "customer", SCAN_FANOUT_TABLE_MIN_BYTES)
         .where(F.col("c_mktsegment") == _PPR_SEGMENT)
         .select((F.col("c_custkey") * 2).alias("node"))
     )
@@ -154,7 +151,7 @@ def _q_triangles_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     # repeated part line). Pinned by the adjacency-set recount test.
     # Near-unique distinct = raw-key-shuffle first consumer: plain loader
     # (r10 q18 A/B, no-reduction partial-agg class).
-    li = _t_shuffle_input(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
     a, b = li.alias("a"), li.alias("b")
     edges = (
         a.join(
@@ -238,7 +235,7 @@ TRI_HUB_CAP = 4
 def _q_triangles_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graphstats import triangle_census
 
-    li = _t_shuffle_input(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
     a, b = li.alias("a"), li.alias("b")
     edges = (
         a.join(
@@ -326,7 +323,7 @@ FROM tri
 
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     # self-join on l_orderkey is the first consumer — plain loader
-    li = _t_shuffle_input(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     a, b = li.alias("a"), li.alias("b")
     return (
         a.join(

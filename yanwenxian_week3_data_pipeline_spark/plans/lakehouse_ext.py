@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from ..functions.hashing import hash60_expr, hash60_sql
+from ..sources.tables import load_table
 from . import QuerySpec
 from .relational import _gated_dim
 
@@ -37,12 +38,8 @@ UPSERT_SNAPSHOT_MAX = 900
 UPSERT_FEED_MIN = 700
 
 
-def _orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/orders.parquet")
-
-
 def _q_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _orders(spark, sf_dir)
+    o = load_table(spark, sf_dir, "orders")
     bkt = hash60_expr(F.col("o_orderkey").cast("string")) % 1000
     snap = o.where(bkt < UPSERT_SNAPSHOT_MAX).select(
         "o_orderkey", F.col("o_totalprice").cast(DEC).alias("old_price")
@@ -88,9 +85,7 @@ FROM snap s FULL OUTER JOIN feed f ON f.o_orderkey = s.o_orderkey
 
 
 def _q_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.tables import load_events
-
-    e = load_events(spark, sf_dir).select("user_id", "event_type", "ts", "event_id")
+    e = load_table(spark, sf_dir, "events").select("user_id", "event_type", "ts", "event_id")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     changed = (
         F.lag("event_type").over(w).isNull()
@@ -152,9 +147,7 @@ WINDOW w3 AS (PARTITION BY user_id ORDER BY valid_from)
 def _q_version_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.hashing import hash60_expr
 
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "lang", "text"
-    )
+    d = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
     v1 = d.where(F.col("doc_id") % 11 != 0).select(
         "doc_id", "lang", hash60_expr(F.col("text")).alias("h1")
     )
@@ -221,12 +214,10 @@ INCR_CUTOVER = "2024-01-16 00:00:00"
 
 
 def _q_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.tables import load_events
-
     # null-ts events are EXCLUDED by declaration (they belong to no window);
     # the oracle filters them identically so the rule is part of the contract
     # rather than an accident of which side of the cutover nulls fall on
-    e = load_events(spark, sf_dir).where(F.col("ts").isNotNull())
+    e = load_table(spark, sf_dir, "events").where(F.col("ts").isNotNull())
     cut = F.lit(INCR_CUTOVER).cast("timestamp_ntz")
 
     from .analytic_ext import _hour_ntz
@@ -282,7 +273,6 @@ FROM events WHERE ts IS NOT NULL GROUP BY 1
 
 def _q_scd2_pit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.asof import asof_join
-    from ..sources.tables import load_events
 
     dim = (
         _q_scd2_history(spark, sf_dir)
@@ -295,7 +285,7 @@ def _q_scd2_pit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     facts = (
-        load_events(spark, sf_dir)
+        load_table(spark, sf_dir, "events")
         .where(F.col("event_type") == "purchase")
         .select("user_id", "ts", F.col("event_id").alias("purchase_id"))
     )
@@ -338,12 +328,8 @@ FROM facts f JOIN live d
 # ---------------------------------------------------------------------------
 
 def _q_dq_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _orders(spark, sf_dir)
-    parents = (
-        spark.read.parquet(f"{sf_dir}/customer.parquet")
-        .select("c_custkey")
-        .distinct()
-    )
+    o = load_table(spark, sf_dir, "orders")
+    parents = load_table(spark, sf_dir, "customer").select("c_custkey").distinct()
     # distinct parent keys are |customer|-bounded → size-gated broadcast
     # (customer is fact-sized at 100 TB; the gate degrades this to a
     # shuffled merge join by construction past 64 MB)
@@ -420,10 +406,7 @@ COMPACT_TARGET_ROWS = 4000
 
 
 def _q_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = spark.read.schema(
-        "event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, "
-        "event_type STRING, value DOUBLE, props STRING"
-    ).parquet(f"{sf_dir}/events.parquet")
+    ev = load_table(spark, sf_dir, "events")
     hourly = ev.groupBy(
         F.to_date("ts").alias("day"), F.hour("ts").alias("hr")
     ).agg(F.count(F.lit(1)).alias("n_rows"))

@@ -76,6 +76,11 @@ from ..operators.similarity import (
     embedding_cosine_pairs,
     semantic_dedup,
 )
+from ..sources.tables import (
+    SCAN_FANOUT_SUFFIX_MIN_BYTES,
+    SCAN_FANOUT_TEXT_MIN_BYTES,
+    load_table,
+)
 from . import QuerySpec
 from .documents_domain import CLEAN_SQL
 
@@ -85,21 +90,8 @@ SIM_K = 10
 _CLEANED = f"SELECT doc_id, {CLEAN_SQL} AS c FROM documents"
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # size-gated under-split-scan fan-out: the signature/tokenize map work
-    # over a one-split documents file serializes on one core without it
-    # (sources/tables.py; no-op at sf0.01 test scale and at multi-split scale)
-    return read_parquet_fanout(
-        spark, f"{sf_dir}/documents.parquet", SCAN_FANOUT_TEXT_MIN_BYTES
-    )
-
-
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-
-
 def _cleaned_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _docs(spark, sf_dir).select(
+    return load_table(spark, sf_dir, "documents", SCAN_FANOUT_TEXT_MIN_BYTES).select(
         "doc_id", clean_text_expr(F.col("text")).alias("c"), "lang"
     )
 
@@ -298,7 +290,7 @@ FROM h
 # ---------------------------------------------------------------------------
 
 def _q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup_exact(_docs(spark, sf_dir), "text", "doc_id")
+    return dedup_exact(load_table(spark, sf_dir, "documents", SCAN_FANOUT_TEXT_MIN_BYTES), "text", "doc_id")
 
 
 _SQL_DEDUP_EXACT = (
@@ -339,7 +331,8 @@ def _minhash_sig_sql(digests_col: str, num: int = MINHASH_NUM_HASHES) -> str:
 
 
 def _q_minhash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return minhash_signatures(_docs(spark, sf_dir), "text", "doc_id").select(
+    d = load_table(spark, sf_dir, "documents", SCAN_FANOUT_TEXT_MIN_BYTES)
+    return minhash_signatures(d, "text", "doc_id").select(
         F.col("id").alias("doc_id"), "sig"
     )
 
@@ -358,8 +351,9 @@ def _band_key_sql(b: int, rows: int = MINHASH_ROWS_PER_BAND) -> str:
 
 
 def _q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = load_table(spark, sf_dir, "documents", SCAN_FANOUT_TEXT_MIN_BYTES)
     return dedup_minhash_lsh(
-        _docs(spark, sf_dir), "text", "doc_id", threshold=MINHASH_JACCARD_THRESHOLD
+        d, "text", "doc_id", threshold=MINHASH_JACCARD_THRESHOLD
     ).withColumnsRenamed({"id_a": "doc_a", "id_b": "doc_b"})
 
 
@@ -409,7 +403,7 @@ SELECT doc_a, doc_b, jaccard FROM verified WHERE jaccard >= {MINHASH_JACCARD_THR
 def _q_minhash_est_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import _minhash_sig_table
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents", SCAN_FANOUT_TEXT_MIN_BYTES)
     pairs = dedup_minhash_lsh(
         docs, "text", "doc_id", threshold=MINHASH_JACCARD_THRESHOLD
     )
@@ -476,7 +470,7 @@ JOIN sigs sb ON sb.doc_id = p.doc_b
 def _q_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import dedup_minhash_lsh, doc_shingles
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents", SCAN_FANOUT_TEXT_MIN_BYTES)
     sh = doc_shingles(docs, "text", "doc_id").where(F.size("shingles") > 0)
     ex = sh.select(
         F.col("id"), F.size("shingles").alias("nsh"), F.explode("shingles").alias("s")
@@ -560,7 +554,7 @@ FROM s, l
 # ---------------------------------------------------------------------------
 
 def _q_source_mirrors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents", SCAN_FANOUT_TEXT_MIN_BYTES)
     pairs = dedup_minhash_lsh(
         docs, "text", "doc_id", threshold=MINHASH_JACCARD_THRESHOLD
     )
@@ -625,7 +619,8 @@ def _simhash_sql(c: str, bits: int = SIMHASH_BITS) -> str:
 
 
 def _q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return simhash_signatures(_docs(spark, sf_dir), "text", "doc_id").select(
+    d = load_table(spark, sf_dir, "documents", SCAN_FANOUT_TEXT_MIN_BYTES)
+    return simhash_signatures(d, "text", "doc_id").select(
         F.col("id").alias("doc_id"), "simhash"
     )
 
@@ -634,8 +629,9 @@ _SQL_SIMHASH = f"WITH d AS ({_CLEANED}) SELECT doc_id, {_simhash_sql('c')} AS si
 
 
 def _q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = load_table(spark, sf_dir, "documents", SCAN_FANOUT_TEXT_MIN_BYTES)
     return dedup_simhash(
-        _docs(spark, sf_dir), "text", "doc_id", max_hamming=SIMHASH_HAMMING_THRESHOLD
+        d, "text", "doc_id", max_hamming=SIMHASH_HAMMING_THRESHOLD
     ).withColumnsRenamed({"id_a": "doc_a", "id_b": "doc_b"})
 
 
@@ -765,13 +761,13 @@ FROM g a JOIN g b ON b.doc_id = a.doc_id + 1
 # ---------------------------------------------------------------------------
 
 def _q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return cosine_topk(_emb(spark, sf_dir), SIM_QUERY_IDS, k=SIM_K)
+    return cosine_topk(load_table(spark, sf_dir, "embeddings"), SIM_QUERY_IDS, k=SIM_K)
 
 
 def _q_cosine_topk_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import cosine_topk_arrow
 
-    return cosine_topk_arrow(_emb(spark, sf_dir), SIM_QUERY_IDS, k=SIM_K)
+    return cosine_topk_arrow(load_table(spark, sf_dir, "embeddings"), SIM_QUERY_IDS, k=SIM_K)
 
 
 _COS = cosine_sql("q.embedding", "e.embedding")
@@ -792,7 +788,8 @@ FROM ranked WHERE rnk <= {SIM_K}
 
 
 def _q_cosine_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return cosine_topk_ivf(_emb(spark, sf_dir), SIM_QUERY_IDS, k=SIM_K, n_cells=16, nprobe=4)
+    e = load_table(spark, sf_dir, "embeddings")
+    return cosine_topk_ivf(e, SIM_QUERY_IDS, k=SIM_K, n_cells=16, nprobe=4)
 
 
 _COS_CENT = cosine_sql("x.embedding", "cen.cell_vec")
@@ -865,7 +862,7 @@ GROUP BY e.query_id
 def _q_emb_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.vectors import norm_expr
 
-    e = _emb(spark, sf_dir)
+    e = load_table(spark, sf_dir, "embeddings")
     norm = norm_expr(F.col("embedding"))
     return e.groupBy("label").agg(
         F.count(F.lit(1)).alias("n"),
@@ -910,9 +907,9 @@ FROM embeddings GROUP BY label
 
 
 def _q_doc_emb_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir).select("doc_id", "n_chars")
+    d = load_table(spark, sf_dir, "documents", SCAN_FANOUT_TEXT_MIN_BYTES).select("doc_id", "n_chars")
     e = (
-        _emb(spark, sf_dir)
+        load_table(spark, sf_dir, "embeddings")
         .select(F.col("vec_id").alias("doc_id"), F.posexplode("embedding"))
         .groupBy("doc_id")
         .agg(
@@ -974,7 +971,7 @@ FROM c
 # --- Embedding near-dup ------------------------------------------------------
 
 def _q_emb_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return embedding_cosine_pairs(_emb(spark, sf_dir), EMB_COSINE_PAIRS_THRESHOLD)
+    return embedding_cosine_pairs(load_table(spark, sf_dir, "embeddings"), EMB_COSINE_PAIRS_THRESHOLD)
 
 
 _NORM_E = norm_sql("embedding")
@@ -994,7 +991,7 @@ def _q_dedup_emb_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH near-dup demo over embeddings ∪ an exact copy (vec_id offset by
     EMB_COPY_OFFSET): every original pairs with its copy at cosine 1.0; the
     near-random originals (max pairwise cosine ≈ 0.51) never verify."""
-    e = _emb(spark, sf_dir).select("vec_id", "embedding")
+    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     copies = e.select((F.col("vec_id") + F.lit(EMB_COPY_OFFSET)).alias("vec_id"), "embedding")
     return dedup_embedding_lsh(e.unionByName(copies), EMB_COSINE_NEAR_DUP)
 
@@ -1081,7 +1078,7 @@ EMB_LSH_PLANES_WIDE = 64
 
 
 def _q_dedup_emb_lsh_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _emb(spark, sf_dir).select("vec_id", "embedding")
+    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     copies = e.select(
         (F.col("vec_id") + F.lit(EMB_COPY_OFFSET)).alias("vec_id"), "embedding"
     )
@@ -1115,7 +1112,7 @@ def _q_emb_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import embedding_knn_graph
 
     return embedding_knn_graph(
-        _emb(spark, sf_dir).select("vec_id", "embedding"), k=EMB_KNN_K
+        load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding"), k=EMB_KNN_K
     )
 
 
@@ -1159,7 +1156,7 @@ FROM r WHERE knn_rank <= {EMB_KNN_K}
 def _q_emb_knn_label_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    lab = _emb(spark, sf_dir).select("vec_id", "label")
+    lab = load_table(spark, sf_dir, "embeddings").select("vec_id", "label")
     g = _q_emb_knn_graph(spark, sf_dir)
     votes = (
         g.join(
@@ -1226,7 +1223,7 @@ def _q_emb_knn_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..functions.vectors import cosine_expr
 
-    e = _emb(spark, sf_dir)
+    e = load_table(spark, sf_dir, "embeddings")
     queries = e.where(
         (F.col("vec_id") % EMB_KNN_RECALL_MOD == 0)
         & (F.col("vec_id") < EMB_KNN_RECALL_MOD * EMB_KNN_RECALL_MAX_QUERIES)
@@ -1279,7 +1276,7 @@ def _q_emb_prefix_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..constants import EMB_PREFIX_DIM, EMB_PREFIX_K
     from ..functions.vectors import cosine_expr
 
-    e = _emb(spark, sf_dir)
+    e = load_table(spark, sf_dir, "embeddings")
     queries = e.where(
         (F.col("vec_id") % EMB_KNN_RECALL_MOD == 0)
         & (F.col("vec_id") < EMB_KNN_RECALL_MOD * EMB_KNN_RECALL_MAX_QUERIES)
@@ -1381,7 +1378,7 @@ GROUP BY e.query_id
 # ---------------------------------------------------------------------------
 
 def _q_mm_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return documents_as_media(_docs(spark, sf_dir)).select(
+    return documents_as_media(load_table(spark, sf_dir, "documents", SCAN_FANOUT_TEXT_MIN_BYTES)).select(
         "media_id", "media_type", "byte_len", "sha256"
     )
 
@@ -1398,7 +1395,8 @@ FROM documents
 def _q_mm_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """mapInPandas feature extraction over binary payloads (stubbed decode —
     deterministic fake; rows-only check, exercised further in tests/)."""
-    return extract_features(documents_as_media(_docs(spark, sf_dir)))
+    d = load_table(spark, sf_dir, "documents", SCAN_FANOUT_TEXT_MIN_BYTES)
+    return extract_features(documents_as_media(d))
 
 
 # ---------------------------------------------------------------------------
@@ -1415,7 +1413,7 @@ def _q_mm_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_mm_features_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir).where(
+    d = load_table(spark, sf_dir, "documents", SCAN_FANOUT_TEXT_MIN_BYTES).where(
         F.col("text").isNotNull()
         & (F.octet_length(F.encode(F.col("text"), "UTF-8")) == F.length("text"))
     )
@@ -1467,7 +1465,7 @@ f AS (SELECT doc_id,
 def _q_mm_frame_sample_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.multimodal import frame_sample
 
-    d = _docs(spark, sf_dir).where(
+    d = load_table(spark, sf_dir, "documents", SCAN_FANOUT_TEXT_MIN_BYTES).where(
         F.col("text").isNotNull()
         & (F.octet_length(F.encode(F.col("text"), "UTF-8")) == F.length("text"))
     )
@@ -1486,7 +1484,7 @@ FROM f, UNNEST(range(0, n_frames, 10)) AS u(i)
 def _q_mm_resize_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.multimodal import resize_media
 
-    d = _docs(spark, sf_dir).where(
+    d = load_table(spark, sf_dir, "documents", SCAN_FANOUT_TEXT_MIN_BYTES).where(
         F.col("text").isNotNull()
         & (F.octet_length(F.encode(F.col("text"), "UTF-8")) == F.length("text"))
     )
@@ -1518,7 +1516,7 @@ FROM f
 def _q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.components import connected_components
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents", SCAN_FANOUT_TEXT_MIN_BYTES)
     pairs = dedup_minhash_lsh(
         docs, "text", "doc_id", threshold=MINHASH_JACCARD_THRESHOLD
     )
@@ -1571,7 +1569,7 @@ def _q_survivors_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     clusters = _q_dedup_clusters(spark, sf_dir).select("doc_id", "cluster_id")
-    docs = _docs(spark, sf_dir).select("doc_id", "source")
+    docs = load_table(spark, sf_dir, "documents", SCAN_FANOUT_TEXT_MIN_BYTES).select("doc_id", "source")
     prio = (
         F.regexp_extract(F.col("source"), "([0-9]+)", 1).cast("long") % 5
     ).alias("priority")
@@ -1632,7 +1630,7 @@ CHUNK_STRIDE = 384
 
 
 def _q_text_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents", SCAN_FANOUT_TEXT_MIN_BYTES)
     n_chunks = (
         F.lit(1)
         + F.floor((F.greatest(F.length("text"), F.lit(1)) - 1) / F.lit(CHUNK_STRIDE))
@@ -1678,7 +1676,8 @@ def _q_text_chunks_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
                 yield doc_id, i, len(ch), hashlib.md5(ch.encode("utf-8")).hexdigest()
 
     spark.udtf.register("chunk_doc_udtf", ChunkDoc)
-    _docs(spark, sf_dir).createOrReplaceTempView("_docs_for_chunk_udtf")
+    d = load_table(spark, sf_dir, "documents", SCAN_FANOUT_TEXT_MIN_BYTES)
+    d.createOrReplaceTempView("_docs_for_chunk_udtf")
     return spark.sql(
         "SELECT f.* FROM _docs_for_chunk_udtf, LATERAL chunk_doc_udtf(doc_id, text) f"
     )
@@ -1710,7 +1709,7 @@ FROM ch
 def _q_train_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.hashing import hash60_expr
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents", SCAN_FANOUT_TEXT_MIN_BYTES)
     bucket = hash60_expr(F.col("doc_id").cast("string")) % 1000
     split = (
         F.when(bucket < 800, "train").when(bucket < 900, "val").otherwise("test")
@@ -1773,7 +1772,10 @@ _INJECTED_SQL = (
 
 
 def _q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir).select("doc_id", _inject_pii_expr().alias("t"))
+    d = (
+        load_table(spark, sf_dir, "documents", SCAN_FANOUT_TEXT_MIN_BYTES)
+        .select("doc_id", _inject_pii_expr().alias("t"))
+    )
     counts = pii_counts_expr(F.col("t"))
     scrubbed = pii_scrub_expr(F.col("t"))
     return d.select(
@@ -1825,7 +1827,7 @@ CURATION_MIN_TOKENS = 30
 def _q_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    d = _docs(spark, sf_dir).select(
+    d = load_table(spark, sf_dir, "documents", SCAN_FANOUT_TEXT_MIN_BYTES).select(
         "doc_id", "lang", "source", clean_text_expr(F.col("text")).alias("c")
     )
     feats = quality_features_expr(F.col("c"))
@@ -1879,7 +1881,7 @@ FUNNEL_STAGES = [
 def _q_training_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    d = _docs(spark, sf_dir).select(
+    d = load_table(spark, sf_dir, "documents", SCAN_FANOUT_TEXT_MIN_BYTES).select(
         "doc_id", clean_text_expr(F.col("text")).alias("c")
     )
     feats = quality_features_expr(F.col("c"))
@@ -2008,7 +2010,7 @@ def _q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
     from ..functions.textstats import tokens_expr
 
-    d = _docs(spark, sf_dir).select(
+    d = load_table(spark, sf_dir, "documents", SCAN_FANOUT_TEXT_MIN_BYTES).select(
         "doc_id", "lang", clean_text_expr(F.col("text")).alias("c")
     )
     tok = d.select("doc_id", "lang", F.explode(tokens_expr(F.col("c"))).alias("t"))
@@ -2059,7 +2061,7 @@ def _q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import dedup_incremental
 
     out = dedup_incremental(
-        _docs(spark, sf_dir),
+        load_table(spark, sf_dir, "documents", SCAN_FANOUT_TEXT_MIN_BYTES),
         "text",
         "doc_id",
         batch_pred=lambda i: i % 10 == 0,
@@ -2620,12 +2622,10 @@ LIMIT {REPEATED_SPAN_TOPK}
 # ---------------------------------------------------------------------------
 
 from ..constants import MIX_BUCKETS, MIX_HASH_SEED, PACK_TOKEN_BUDGET  # noqa: E402
-from ..constants import SCAN_FANOUT_TEXT_MIN_BYTES
-from ..sources.tables import read_parquet_fanout
 
 
 def _q_sample_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents", SCAN_FANOUT_TEXT_MIN_BYTES)
     src_num = F.regexp_extract(F.col("source"), "([0-9]+)", 1).cast("long")
     frac_bp = (src_num % 4 + 1) * (MIX_BUCKETS // 4)
     h = hash60_expr(F.col("doc_id").cast("string"), seed=MIX_HASH_SEED) % MIX_BUCKETS
@@ -2662,7 +2662,7 @@ FROM s WHERE h < frac_bp GROUP BY source
 def _q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    d = _docs(spark, sf_dir).select(
+    d = load_table(spark, sf_dir, "documents", SCAN_FANOUT_TEXT_MIN_BYTES).select(
         "doc_id", "source", token_count_expr(clean_text_expr(F.col("text"))).alias("n_tok")
     )
     w = (
@@ -2697,7 +2697,7 @@ FROM c GROUP BY 1, 2
 # ---------------------------------------------------------------------------
 
 def _q_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    truth = _emb(spark, sf_dir).select(
+    truth = load_table(spark, sf_dir, "embeddings").select(
         F.col("vec_id").alias("id_a"),
         (F.col("vec_id") + F.lit(EMB_COPY_OFFSET)).alias("id_b"),
     )
@@ -2730,7 +2730,7 @@ def _q_cosine_topk_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     sim_ivf_kmeans_recall instead."""
     from ..operators.similarity import cosine_topk_ivf_kmeans
 
-    return cosine_topk_ivf_kmeans(_emb(spark, sf_dir), SIM_QUERY_IDS, k=SIM_K)
+    return cosine_topk_ivf_kmeans(load_table(spark, sf_dir, "embeddings"), SIM_QUERY_IDS, k=SIM_K)
 
 
 def _q_ivf_kmeans_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2792,7 +2792,7 @@ _CLUSTER_QUERY_IDS = [9, 10, 11, 12, 13]  # clusters 1-5: none covered by ids 0-
 
 
 def _clustered_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _emb(spark, sf_dir)
+    e = load_table(spark, sf_dir, "embeddings")
     c = F.when(F.col("vec_id") < 8, F.lit(0)).otherwise(
         F.col("vec_id") % _CLUSTER_CELLS
     )
@@ -2981,12 +2981,7 @@ def _toks_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     # was ~1.0 s of the 2.9–4.1 s sf0.1 wall, serialized). The lower floor
     # fans out whenever the ×cap work is worth 32 tasks; still a no-op at
     # sf0.01 oracle scale and at multi-split real scale.
-    from ..constants import SCAN_FANOUT_SUFFIX_MIN_BYTES
-    from ..sources.tables import read_parquet_fanout
-
-    d = read_parquet_fanout(
-        spark, f"{sf_dir}/documents.parquet", SCAN_FANOUT_SUFFIX_MIN_BYTES
-    )
+    d = load_table(spark, sf_dir, "documents", SCAN_FANOUT_SUFFIX_MIN_BYTES)
     return d.select(tokens_expr(clean_text_expr(F.col("text"))).alias("toks"))
 
 
@@ -3057,7 +3052,7 @@ def _q_jl_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     planes = hyperplane_matrix(JL_PLANES, EMB_DIM, JL_SEED)
-    e = _emb(spark, sf_dir)
+    e = load_table(spark, sf_dir, "embeddings")
 
     def proj(vec):
         return F.array(
@@ -3153,7 +3148,7 @@ def _q_pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.pq import pq_adc_recall
 
     return pq_adc_recall(
-        _emb(spark, sf_dir),
+        load_table(spark, sf_dir, "embeddings"),
         n_codewords=PQ_CODEWORDS,
         n_queries=PQ_QUERIES,
         n_sub=PQ_SUB,
@@ -3281,7 +3276,7 @@ def _q_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import cdc_chunk_pairs
 
     return cdc_chunk_pairs(
-        _docs(spark, sf_dir),
+        load_table(spark, sf_dir, "documents", SCAN_FANOUT_TEXT_MIN_BYTES),
         "text",
         "doc_id",
         gear_mod=CDC_GEAR_MOD,
@@ -3520,7 +3515,7 @@ def _gopher_sql() -> str:
 def _q_domain_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.textstats import gopher_rules_expr
 
-    d = _docs(spark, sf_dir).select(
+    d = load_table(spark, sf_dir, "documents", SCAN_FANOUT_TEXT_MIN_BYTES).select(
         "source",
         "lang",
         "n_chars",
@@ -3560,7 +3555,8 @@ FROM d GROUP BY source ORDER BY source
 def _q_mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.multimodal import frame_sample
 
-    return frame_sample(documents_as_media(_docs(spark, sf_dir)), stride=10)
+    d = load_table(spark, sf_dir, "documents", SCAN_FANOUT_TEXT_MIN_BYTES)
+    return frame_sample(documents_as_media(d), stride=10)
 
 
 def _q_mm_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3568,7 +3564,8 @@ def _q_mm_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     check like the other mm_ ops — SURVEY.md §2.10 multimodal row)."""
     from ..operators.multimodal import resize_media
 
-    return resize_media(documents_as_media(_docs(spark, sf_dir))).drop("payload")
+    d = load_table(spark, sf_dir, "documents", SCAN_FANOUT_TEXT_MIN_BYTES)
+    return resize_media(documents_as_media(d)).drop("payload")
 
 
 QUERIES.extend(

@@ -53,20 +53,13 @@ from ..constants import (
     NB_SPLIT_SEED,
     PMI_MIN_COUNT,
     PMI_TOPK,
-    SCAN_FANOUT_TEXT_MIN_BYTES,
 )
 from ..functions.hashing import hash60_expr, hash60_sql
 from ..functions.text import clean_text_expr
 from ..functions.textstats import tokens_expr, tokens_sql
 from ..operators.bpe import bpe_encode_oracle_sql, bpe_learn, bpe_oracle_sql
-from ..sources.tables import read_parquet_fanout
+from ..sources.tables import SCAN_FANOUT_TEXT_MIN_BYTES, load_table
 from .documents_domain import CLEAN_SQL
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return read_parquet_fanout(
-        spark, f"{sf_dir}/documents.parquet", SCAN_FANOUT_TEXT_MIN_BYTES
-    )
 
 
 _CLEANED_LM = f"SELECT doc_id, {CLEAN_SQL} AS c FROM documents"
@@ -77,7 +70,10 @@ _CLEANED_LM = f"SELECT doc_id, {CLEAN_SQL} AS c FROM documents"
 # ---------------------------------------------------------------------------
 
 def _word_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir).select(clean_text_expr(F.col("text")).alias("c"))
+    d = (
+        load_table(spark, sf_dir, "documents", SCAN_FANOUT_TEXT_MIN_BYTES)
+        .select(clean_text_expr(F.col("text")).alias("c"))
+    )
     return (
         d.select(F.explode(tokens_expr(F.col("c"))).alias("word"))
         .where(F.length("word") <= BPE_MAX_WORD_LEN)
@@ -118,7 +114,10 @@ BPE_ENCODE_TOPK = 20
 
 
 def _all_word_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir).select(clean_text_expr(F.col("text")).alias("c"))
+    d = (
+        load_table(spark, sf_dir, "documents", SCAN_FANOUT_TEXT_MIN_BYTES)
+        .select(clean_text_expr(F.col("text")).alias("c"))
+    )
     return (
         d.select(F.explode(tokens_expr(F.col("c"))).alias("word"))
         .where(F.length("word") <= BPE_MAX_WORD_LEN)
@@ -168,7 +167,7 @@ GROUP BY g
 def _doc_bigram_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, lang, bp, bw) — one row per adjacent-token bigram, both
     sides hashed into LM_BUCKETS buckets."""
-    d = _docs(spark, sf_dir).select(
+    d = load_table(spark, sf_dir, "documents", SCAN_FANOUT_TEXT_MIN_BYTES).select(
         "doc_id", "lang", clean_text_expr(F.col("text")).alias("c")
     )
     tk = tokens_expr(F.col("c"))
@@ -311,7 +310,7 @@ def _q_nb_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     b_lit = F.lit(NB_BUCKETS)
-    d = _docs(spark, sf_dir).select(
+    d = load_table(spark, sf_dir, "documents", SCAN_FANOUT_TEXT_MIN_BYTES).select(
         "doc_id", "lang", clean_text_expr(F.col("text")).alias("c")
     ).where(F.col("lang").isNotNull())
     feats = d.select(
@@ -458,7 +457,10 @@ FROM ranked WHERE rn = 1 GROUP BY 1, 2
 # ---------------------------------------------------------------------------
 
 def _q_cms_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir).select(clean_text_expr(F.col("text")).alias("c"))
+    d = (
+        load_table(spark, sf_dir, "documents", SCAN_FANOUT_TEXT_MIN_BYTES)
+        .select(clean_text_expr(F.col("text")).alias("c"))
+    )
     toks = d.select(F.explode(tokens_expr(F.col("c"))).alias("tok"))
     rows = toks.select(
         "tok",
@@ -566,7 +568,7 @@ INVIDX_POSTINGS_CAP = 8
 def _q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    d = _docs(spark, sf_dir).select(
+    d = load_table(spark, sf_dir, "documents", SCAN_FANOUT_TEXT_MIN_BYTES).select(
         "doc_id", clean_text_expr(F.col("text")).alias("c")
     )
     tok_doc = d.select(
@@ -629,7 +631,7 @@ ORDER BY df DESC, tok ASC LIMIT {INVIDX_TOPK}
 def _q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..constants import BM25_QUERY_TERMS, BM25_TOPK
 
-    d = _docs(spark, sf_dir).select(
+    d = load_table(spark, sf_dir, "documents", SCAN_FANOUT_TEXT_MIN_BYTES).select(
         "doc_id", tokens_expr(clean_text_expr(F.col("text"))).alias("toks")
     )
     def _tf(term: str):
@@ -736,7 +738,7 @@ ORDER BY bm25 DESC, doc_id ASC LIMIT {BM25_TOPK}
 
 
 def _q_unigram_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir).select(
+    d = load_table(spark, sf_dir, "documents", SCAN_FANOUT_TEXT_MIN_BYTES).select(
         tokens_expr(clean_text_expr(F.col("text"))).alias("toks")
     )
     freq = (
@@ -801,7 +803,10 @@ def _lmilli(col):
 
 
 def _q_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir).select(clean_text_expr(F.col("text")).alias("c"))
+    d = (
+        load_table(spark, sf_dir, "documents", SCAN_FANOUT_TEXT_MIN_BYTES)
+        .select(clean_text_expr(F.col("text")).alias("c"))
+    )
     tk = tokens_expr(F.col("c"))
     # F.sequence on size<2 would yield a DESCENDING range — gate it (the
     # _doc_bigram_buckets pitfall)

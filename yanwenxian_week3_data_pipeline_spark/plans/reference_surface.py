@@ -19,6 +19,7 @@ from ..functions.text import (
 from ..operators.aggregates import completeness, date_range, failure_distribution, pass_rate
 from ..operators.dedup import dedup_keep_first
 from ..operators.validate import passed_expr, with_validation
+from ..sources.tables import load_table
 from . import QuerySpec
 from .documents_domain import (
     CLEANED_CTE,
@@ -33,18 +34,10 @@ from .documents_domain import (
 )
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/orders.parquet")
-
-
 # Staged document DataFrames (shared by several queries)
 
 def _doc_stages(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     cleaned = cleaned_documents(docs)
     complete = cleaned.where(complete_predicate())
     deduped = dedup_keep_first(complete, key_cols=("text_clean",), order_col="doc_id")
@@ -72,7 +65,7 @@ validated AS (SELECT *, {PASSED_SQL} AS passed, {REASON_SQL} AS reason, {MESSAGE
 # ---------------------------------------------------------------------------
 
 def _q_clean_text(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _docs(spark, sf_dir).select(
+    return load_table(spark, sf_dir, "documents").select(
         "doc_id", clean_text_expr(F.col("text")).alias("text_clean")
     )
 
@@ -87,7 +80,7 @@ _SQL_CLEAN_TEXT = f"SELECT doc_id, {CLEAN_SQL} AS text_clean FROM documents"
 # ---------------------------------------------------------------------------
 
 def _q_is_missing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _docs(spark, sf_dir).select(
+    return load_table(spark, sf_dir, "documents").select(
         "doc_id",
         is_missing_expr(F.col("text")).alias("text_missing"),
         is_missing_expr(F.col("lang")).alias("lang_missing"),
@@ -169,7 +162,7 @@ def _q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     The staged form (four cascading DataFrames, one count each) scans and
     re-cleans the table once per stage — 4× the I/O at 100 TB; this shape
     reads it once and shuffles once (the dedup-key window)."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     flagged = cleaned_documents(docs).withColumn("_complete", complete_predicate())
     # hash prefix on the dedup key: identical grouping, but shuffle-sort
     # comparisons short-circuit on a long instead of multi-KB text
@@ -230,7 +223,7 @@ UNION ALL SELECT 3, 'valid', (SELECT count(*) FROM validated WHERE passed)
 # ---------------------------------------------------------------------------
 
 def _q_completeness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return completeness(_docs(spark, sf_dir), ["text", "lang", "source"])
+    return completeness(load_table(spark, sf_dir, "documents"), ["text", "lang", "source"])
 
 
 def _completeness_col_sql(c: str) -> str:
@@ -323,7 +316,7 @@ _SQL_PASS_RATE = _STAGES_SQL + (
 # ---------------------------------------------------------------------------
 
 def _q_date_range(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return date_range(_orders(spark, sf_dir), "o_orderdate")
+    return date_range(load_table(spark, sf_dir, "orders"), "o_orderdate")
 
 
 _SQL_DATE_RANGE = (
@@ -339,7 +332,7 @@ _SQL_DATE_RANGE = (
 # ---------------------------------------------------------------------------
 
 def _q_parse_iso_date(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _orders(spark, sf_dir)
+    o = load_table(spark, sf_dir, "orders")
     m = (F.col("o_orderkey") % 5).cast("int")
     raw = (
         F.when(m == 0, F.date_format("o_orderdate", "yyyy-MM-dd"))
@@ -379,7 +372,7 @@ SELECT o_orderkey, raw_date, {parse_iso_date_sql('raw_date')} AS iso_date FROM s
 # ---------------------------------------------------------------------------
 
 def _q_safe_str(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
         F.coalesce(F.trim(F.col("source").cast("string")), F.lit("")).alias("source_str"),
@@ -400,7 +393,7 @@ _SQL_SAFE_STR = (
 # ---------------------------------------------------------------------------
 
 def _q_proj_text_cols(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _docs(spark, sf_dir).select("doc_id", "text", "lang", "source")
+    return load_table(spark, sf_dir, "documents").select("doc_id", "text", "lang", "source")
 
 
 _SQL_PROJ_TEXT_COLS = "SELECT doc_id, text, lang, source FROM documents"
@@ -412,9 +405,7 @@ _SQL_PROJ_TEXT_COLS = "SELECT doc_id, text, lang, source FROM documents"
 # ---------------------------------------------------------------------------
 
 def _q_alias_published(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.tables import load_events
-
-    ev = load_events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     published = F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss'Z'")
     return ev.select(
         "event_id",
@@ -451,9 +442,7 @@ _SQL_VAL_ROW = _STAGES_SQL + (
 # ---------------------------------------------------------------------------
 
 def _q_notna(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.tables import load_events
-
-    ev = load_events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     return ev.agg(
         F.count("ts").alias("n_parsed"),
         F.count(F.lit(1)).alias("n_rows"),

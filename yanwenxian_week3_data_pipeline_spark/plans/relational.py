@@ -23,8 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from . import QuerySpec
-from ..constants import SCAN_FANOUT_TABLE_MIN_BYTES
-from ..sources.tables import _local_parquet_bytes, read_parquet_fanout
+from ..sources.tables import SCAN_FANOUT_TABLE_MIN_BYTES, _local_parquet_bytes, load_table
 
 DEC = "decimal(18,2)"
 
@@ -63,56 +62,6 @@ def _gated_dim(dim: DataFrame, sf_dir: str, table: str = "customer") -> DataFram
     return dim.hint("merge")
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # size-gated fan-out: single-file tables are one input split (one
-    # row group), so Q1-class scan+partial-agg work serializes on one
-    # core without it; no-op at sf0.01 test scale and at real multi-split
-    # scale (see sources/tables.py)
-    return read_parquet_fanout(
-        spark, f"{sf_dir}/{name}.parquet", SCAN_FANOUT_TABLE_MIN_BYTES
-    )
-
-
-def _t_shuffle_input(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Loader for tables whose FIRST consumer is a key shuffle (join or
-    window) with no heavy per-row expressions before it: plain scan, NO
-    fan-out. The fan-out's round-robin repartition buys nothing here —
-    the single-split scan must serialize the shuffle write either way,
-    so it only adds a full extra exchange of the table. r9 interleaved
-    A/B on the registered queries (fanout vs plain, warm medians):
-    join_region_revenue sf0.1 1.841 → 1.029 s (−44 %), sf1 14.2 → 6.3 s
-    under identical load (−56 %; the fan-out was the whole 4.0× sf1
-    scaling anomaly); window_topk_per_customer sf1 2.895 → 2.627 s (raw
-    won all 6 interleaved rounds), sf0.1 wash (orders sits below the
-    fan-out gate there). Contrast q1/minhash-class scans, where per-row
-    work dominates and the fan-out is the measured WIN (r4: q1 5.9 →
-    2.9 s at sf1) — the decision is per-consumer, not per-table.
-
-    r10 propagation A/Bs (tools/ab_loader.py, interleaved, warm medians,
-    plain vs fanout): q3 sf0.1 1.103 vs 1.527, sf1 2.418 vs 4.643; q5
-    sf0.1 1.136 vs 1.699, sf1 2.131 vs 8.820 (the fan-out's full exchange
-    of unfiltered lineitem was a 4.1x loss); q18 sf1 7.629 vs 10.995 —
-    so a HIGH-CARDINALITY groupBy/distinct whose partial agg barely
-    reduces belongs to the shuffle class too. The measured boundary:
-    q11's l_partkey groupBy (~30x reduction) was a wash (7.646 vs
-    7.806); low-cardinality aggs with per-row expression work stay on
-    the fan-out (q1 class).
-
-    r10 pin-sweep refinement (all interleaved A/Bs at sf1): a BROADCAST
-    PROBE is one hash lookup per row, not map-heavy work — if a key
-    shuffle (join, near-unique distinct/groupBy) follows the probes, load
-    plain (q8 2.255 vs 8.474; q9 4.349 vs 8.740; q2 1.415 vs 6.643; q16
-    2.177 vs 7.133; q20 2.461 vs 2.802; q15 1.066 vs 1.634). And the
-    fan-out's exchange carries the POST-pushdown scan output: with no
-    pushed filter it re-ships the whole table full-width, losing even
-    before a global agg (q19 1.065 vs 5.376, -80%). The fan-out's
-    remaining measured wins: a pushed filter shrinks the scan AND what
-    follows is probe/expression work with no key shuffle (q14 0.986 vs
-    1.148; q1-class scans; q11/q17 partkey-grain washes keep it by
-    default)."""
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
 # ---------------------------------------------------------------------------
 # q1_pricing_summary — TPC-H Q1-shaped scan+aggregate over lineitem
 # ---------------------------------------------------------------------------
@@ -120,7 +69,7 @@ def _t_shuffle_input(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def _q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     from . import dec_as_double
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem", SCAN_FANOUT_TABLE_MIN_BYTES)
     qty = F.col("l_quantity").cast(DEC)
     price = F.col("l_extendedprice").cast(DEC)
     disc = F.col("l_discount").cast(DEC)
@@ -193,13 +142,14 @@ _SQL_Q1 = _sql_q1()
 
 def _q_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both facts feed the merge join directly (no per-row expression work
-    # before the key shuffle) — plain scans, no fan-out (see
-    # _t_shuffle_input: the fan-out here WAS the 4.0x sf1 scaling anomaly)
-    li = _t_shuffle_input(spark, sf_dir, "lineitem")
-    orders = _t_shuffle_input(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region")
+    # before the key shuffle) — plain scans, no fan-out (see the fan-out
+    # floors in sources/tables.py: the fan-out here WAS the 4.0x sf1
+    # scaling anomaly)
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer", SCAN_FANOUT_TABLE_MIN_BYTES)
+    nation = load_table(spark, sf_dir, "nation", SCAN_FANOUT_TABLE_MIN_BYTES)
+    region = load_table(spark, sf_dir, "region", SCAN_FANOUT_TABLE_MIN_BYTES)
     revenue = (F.col("l_extendedprice").cast(DEC) * (F.lit(1).cast(DEC) - F.col("l_discount").cast(DEC)))
     dim = (
         cust.join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
@@ -254,8 +204,8 @@ GROUP BY r_name
 # ---------------------------------------------------------------------------
 
 def _q_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer", SCAN_FANOUT_TABLE_MIN_BYTES)
+    orders = load_table(spark, sf_dir, "orders", SCAN_FANOUT_TABLE_MIN_BYTES)
     urgent = orders.where(F.col("o_orderpriority") == "1-URGENT")
     return cust.join(urgent, cust.c_custkey == urgent.o_custkey, "left_semi").select(
         "c_custkey", "c_name", "c_mktsegment"
@@ -269,8 +219,8 @@ _SQL_SEMI = (
 
 
 def _q_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = _t(spark, sf_dir, "part")
-    li = _t(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part", SCAN_FANOUT_TABLE_MIN_BYTES)
+    li = load_table(spark, sf_dir, "lineitem", SCAN_FANOUT_TABLE_MIN_BYTES)
     return part.join(li, part.p_partkey == li.l_partkey, "left_anti").select(
         "p_partkey", "p_name", "p_brand"
     )
@@ -287,7 +237,7 @@ _SQL_ANTI = (
 # ---------------------------------------------------------------------------
 
 def _q_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders", SCAN_FANOUT_TABLE_MIN_BYTES)
     return (
         orders.rollup("o_orderstatus", "o_orderpriority")
         .agg(
@@ -310,7 +260,7 @@ FROM orders GROUP BY ROLLUP(o_orderstatus, o_orderpriority)
 
 
 def _q_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem", SCAN_FANOUT_TABLE_MIN_BYTES)
     return li.cube("l_returnflag", "l_linestatus").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.col("l_quantity").cast(DEC)).alias("sum_qty"),
@@ -335,7 +285,7 @@ FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)
 def _q_window_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # orders feeds the window's custkey shuffle directly — plain scan,
     # no fan-out (r9 A/B: raw won all 6 interleaved sf1 rounds)
-    orders = _t_shuffle_input(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
     return (
         orders.withColumn("rnk", F.row_number().over(w).cast("int"))
@@ -354,7 +304,7 @@ SELECT o_custkey, o_orderkey, o_totalprice, CAST(rnk AS INT) AS rnk FROM (
 
 
 def _q_window_running(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders", SCAN_FANOUT_TABLE_MIN_BYTES)
     w = (
         Window.partitionBy("o_custkey")
         .orderBy(F.asc("o_orderdate"), F.asc("o_orderkey"))
@@ -378,7 +328,7 @@ FROM orders
 
 
 def _q_window_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders", SCAN_FANOUT_TABLE_MIN_BYTES)
     w = Window.partitionBy("o_custkey").orderBy(F.asc("o_orderdate"), F.asc("o_orderkey"))
     prev = F.lag(F.col("o_totalprice").cast(DEC)).over(w)
     return orders.select(
@@ -408,7 +358,7 @@ WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate ASC, o_orderkey ASC)
 # ---------------------------------------------------------------------------
 
 def _q_set_union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders", SCAN_FANOUT_TABLE_MIN_BYTES)
     a = orders.where(F.col("o_orderpriority") == "1-URGENT").select("o_custkey")
     b = orders.where(F.col("o_orderpriority") == "2-HIGH").select("o_custkey")
     return a.union(b).distinct()
@@ -421,7 +371,7 @@ _SQL_SET_UNION = (
 
 
 def _q_set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders", SCAN_FANOUT_TABLE_MIN_BYTES)
     a = orders.where(F.col("o_orderpriority") == "1-URGENT").select("o_custkey")
     b = orders.where(F.col("o_orderpriority") == "5-LOW").select("o_custkey")
     return a.intersect(b)
@@ -434,7 +384,7 @@ _SQL_SET_INTERSECT = (
 
 
 def _q_set_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders", SCAN_FANOUT_TABLE_MIN_BYTES)
     a = orders.select("o_custkey")
     b = orders.where(F.col("o_orderstatus") == "F").select("o_custkey")
     return a.exceptAll(b)
@@ -451,7 +401,7 @@ _SQL_SET_EXCEPT_ALL = (
 # ---------------------------------------------------------------------------
 
 def _q_topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders", SCAN_FANOUT_TABLE_MIN_BYTES)
     return (
         orders.orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
         .select("o_orderkey", "o_custkey", "o_totalprice")
@@ -466,7 +416,7 @@ _SQL_TOPK_ORDERS = (
 
 
 def _q_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem", SCAN_FANOUT_TABLE_MIN_BYTES)
     return li.agg(
         F.countDistinct("l_partkey").alias("n_parts"),
         F.countDistinct("l_suppkey").alias("n_supps"),
@@ -486,7 +436,7 @@ def _q_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     output is the exact count plus a boolean asserting the estimate landed
     within 5×rsd (rsd=0.02 → ±10%, ~5 sigma — deterministic pass for a
     correct HLL++). The oracle computes the exact count and literal true."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem", SCAN_FANOUT_TABLE_MIN_BYTES)
     agg = li.agg(
         F.approx_count_distinct("l_partkey", 0.02).alias("approx_parts"),
         F.countDistinct("l_partkey").alias("exact_parts"),
@@ -506,9 +456,8 @@ _SQL_APPROX_DISTINCT = (
 
 def _q_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sessionize import tumbling_window_agg
-    from ..sources.tables import load_events
 
-    return tumbling_window_agg(load_events(spark, sf_dir), "1 hour")
+    return tumbling_window_agg(load_table(spark, sf_dir, "events"), "1 hour")
 
 
 _SQL_TUMBLING = """
@@ -522,9 +471,8 @@ FROM events GROUP BY 1
 
 def _q_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sessionize import sliding_window_agg
-    from ..sources.tables import load_events
 
-    return sliding_window_agg(load_events(spark, sf_dir), "15 minutes", "5 minutes")
+    return sliding_window_agg(load_table(spark, sf_dir, "events"), "15 minutes", "5 minutes")
 
 
 # every event belongs to exactly 3 windows (15m span / 5m slide); DuckDB's
@@ -545,9 +493,8 @@ FROM expanded GROUP BY 1
 
 def _q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sessionize import sessionize
-    from ..sources.tables import load_events
 
-    return sessionize(load_events(spark, sf_dir), gap_minutes=30)
+    return sessionize(load_table(spark, sf_dir, "events"), gap_minutes=30)
 
 
 _SQL_SESSIONIZE = """
@@ -578,9 +525,7 @@ def _q_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-gap event (Δ == 30:00.000000) opens a new session natively but
     extends the session in the strict `>` manual form — unobservable at
     microsecond-jittered timestamps, noted for exact-minute feeds."""
-    from ..sources.tables import load_events
-
-    e = load_events(spark, sf_dir)
+    e = load_table(spark, sf_dir, "events")
     return (
         e.groupBy(
             F.session_window(F.col("ts"), "30 minutes").alias("sw"), F.col("user_id")
@@ -620,9 +565,8 @@ def _q_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Each purchase matched to the user's most recent prior-or-equal view
     (backward as-of join; unmatched purchases keep nulls)."""
     from ..operators.asof import asof_join
-    from ..sources.tables import load_events
 
-    ev = load_events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     purchases = ev.where(F.col("event_type") == "purchase").select(
         "user_id", "ts", F.col("event_id").alias("purchase_id"), F.col("value").alias("purchase_value")
     )
@@ -658,9 +602,8 @@ def _q_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the as-of join, same one-shuffle union-tag-window shape with the
     carry run both ways."""
     from ..operators.asof import asof_join_nearest
-    from ..sources.tables import load_events
 
-    ev = load_events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     purchases = ev.where(F.col("event_type") == "purchase").select(
         "user_id", "ts", F.col("event_id").alias("purchase_id"), F.col("value").alias("purchase_value")
     )
@@ -723,9 +666,7 @@ FROM picked
 # ---------------------------------------------------------------------------
 
 def _q_session_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.tables import load_events
-
-    ev = load_events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     w_user = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
     gap = F.expr("INTERVAL 30 MINUTES")
     with_ids = ev.withColumn(
@@ -793,14 +734,27 @@ def _q_cross_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     reporting shape. Both cross sides are tiny dimensions; the fact joins
     by broadcast. (The plan tests elsewhere assert no query falls into a
     cartesian ACCIDENTALLY — this one is the intentional counterpart.)"""
-    region = _t(spark, sf_dir, "region").select("r_name")
-    prio = _t(spark, sf_dir, "orders").select("o_orderpriority").distinct()
+    region = load_table(spark, sf_dir, "region", SCAN_FANOUT_TABLE_MIN_BYTES).select("r_name")
+    prio = (
+        load_table(spark, sf_dir, "orders", SCAN_FANOUT_TABLE_MIN_BYTES)
+        .select("o_orderpriority")
+        .distinct()
+    )
     grid = region.crossJoin(prio)
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_regionkey")
-    reg = _t(spark, sf_dir, "region").select("r_regionkey", F.col("r_name").alias("rr_name"))
+    cust = (
+        load_table(spark, sf_dir, "customer", SCAN_FANOUT_TABLE_MIN_BYTES)
+        .select("c_custkey", "c_nationkey")
+    )
+    nation = (
+        load_table(spark, sf_dir, "nation", SCAN_FANOUT_TABLE_MIN_BYTES)
+        .select("n_nationkey", "n_regionkey")
+    )
+    reg = (
+        load_table(spark, sf_dir, "region", SCAN_FANOUT_TABLE_MIN_BYTES)
+        .select("r_regionkey", F.col("r_name").alias("rr_name"))
+    )
     counts = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders", SCAN_FANOUT_TABLE_MIN_BYTES)
         .join(_gated_dim(cust, sf_dir, "customer"), F.col("o_custkey") == F.col("c_custkey"))
         .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
         .join(F.broadcast(reg), F.col("n_regionkey") == F.col("r_regionkey"))
@@ -840,9 +794,7 @@ ORDER BY g.r_name, g.o_orderpriority
 
 
 def _q_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.tables import load_events
-
-    ev = load_events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     k = F.get_json_object("props", "$.k").cast("long")
     return (
         ev.select("event_type", k.alias("k"))
@@ -876,9 +828,7 @@ def _q_props_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
     twins (get_json_object) and their shared oracle both null-tolerate bad
     JSON, so the variant's failure semantics must match. Shares
     events_json_props' oracle — the surfaces must agree exactly."""
-    from ..sources.tables import load_events
-
-    ev = load_events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     k = F.variant_get(F.try_parse_json("props"), "$.k", "long")
     return (
         ev.select("event_type", k.alias("k"))

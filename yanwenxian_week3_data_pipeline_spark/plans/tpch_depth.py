@@ -32,20 +32,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import QuerySpec
-from .relational import _gated_dim, _t_shuffle_input
-from ..constants import SCAN_FANOUT_TABLE_MIN_BYTES
-from ..sources.tables import read_parquet_fanout
+from .relational import _gated_dim
+from ..sources.tables import SCAN_FANOUT_TABLE_MIN_BYTES, load_table
 
 DEC = "decimal(18,2)"
 QTY = "decimal(18,1)"
 TS = "timestamp_ntz"
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # size-gated under-split-scan fan-out (sources/tables.py)
-    return read_parquet_fanout(
-        spark, f"{sf_dir}/{name}.parquet", SCAN_FANOUT_TABLE_MIN_BYTES
-    )
 
 
 def _revenue() -> F.Column:
@@ -64,15 +56,18 @@ _REV_SQL = f"CAST(l_extendedprice AS {DEC}) * (CAST(1 AS {DEC}) - CAST(l_discoun
 # ---------------------------------------------------------------------------
 
 def _q2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = _t(spark, sf_dir, "part").where(
+    part = load_table(spark, sf_dir, "part", SCAN_FANOUT_TABLE_MIN_BYTES).where(
         (F.col("p_type") == "STANDARD") & (F.col("p_size") <= 15)
     ).select("p_partkey", "p_brand", "p_size")
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name", "s_acctbal")
+    supp = (
+        load_table(spark, sf_dir, "supplier", SCAN_FANOUT_TABLE_MIN_BYTES)
+        .select("s_suppkey", "s_name", "s_acctbal")
+    )
     shipped = (
         # plain lineitem: the near-unique distinct after the probe is a key
         # shuffle (q8/q9's probes-then-shuffle rule) — r10 A/B plain 1.415
         # vs fanout 6.643 s at sf1 (-79%), 0.833 vs 1.440 at sf0.1
-        _t_shuffle_input(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .select("l_partkey", "l_suppkey")
         .join(_gated_dim(part, sf_dir, "part"), F.col("l_partkey") == F.col("p_partkey"))
         .select("p_partkey", "p_brand", "p_size", "l_suppkey")
@@ -119,13 +114,14 @@ LIMIT 100
 
 def _q4(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both facts feed the o_orderkey semi join after pushed filters /
-    # projections only — plain loaders by the _t_shuffle_input rule
+    # projections only — plain scans by the shuffle-input rule of
+    # sources/tables.py
     # (r10 A/B evidence on the q3/q5 siblings)
-    orders = _t_shuffle_input(spark, sf_dir, "orders").where(
+    orders = load_table(spark, sf_dir, "orders").where(
         (F.col("o_orderdate") >= F.lit("1997-01-01").cast(TS))
         & (F.col("o_orderdate") < F.lit("1997-04-01").cast(TS))
     )
-    li = _t_shuffle_input(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
     return (
         orders.join(
             li,
@@ -154,15 +150,21 @@ ORDER BY o_orderpriority
 # ---------------------------------------------------------------------------
 
 def _q7(spark: SparkSession, sf_dir: str) -> DataFrame:
-    nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    nation = load_table(spark, sf_dir, "nation", SCAN_FANOUT_TABLE_MIN_BYTES).select("n_nationkey", "n_name")
     # shuffle-bound facts (q3/q5 class): plain loaders
-    li = _t_shuffle_input(spark, sf_dir, "lineitem").where(
+    li = load_table(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast(TS))
         & (F.col("l_shipdate") < F.lit("1998-01-01").cast(TS))
     )
-    orders = _t_shuffle_input(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    cust = (
+        load_table(spark, sf_dir, "customer", SCAN_FANOUT_TABLE_MIN_BYTES)
+        .select("c_custkey", "c_nationkey")
+    )
+    supp = (
+        load_table(spark, sf_dir, "supplier", SCAN_FANOUT_TABLE_MIN_BYTES)
+        .select("s_suppkey", "s_nationkey")
+    )
     n1 = nation.select(
         F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("supp_nation")
     )
@@ -208,8 +210,8 @@ ORDER BY supp_nation, cust_nation, l_year
 # ---------------------------------------------------------------------------
 
 def _q8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    region = _t(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
-    nation = _t(spark, sf_dir, "nation")
+    region = load_table(spark, sf_dir, "region", SCAN_FANOUT_TABLE_MIN_BYTES).where(F.col("r_name") == "ASIA")
+    nation = load_table(spark, sf_dir, "nation", SCAN_FANOUT_TABLE_MIN_BYTES)
     asia_keys = nation.join(
         F.broadcast(region), nation.n_regionkey == region.r_regionkey
     ).select(F.col("n_nationkey").alias("cn_key"))
@@ -218,17 +220,27 @@ def _q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # lineitem is plain too: broadcast probes are a hash lookup per row,
     # not q1-class map work, and the o_orderkey shuffle follows — r10
-    # interleaved A/B (tools/ab_loader.py): plain 2.255 vs fanout 8.474 s
+    # interleaved A/B (tools/ab_loader.py, in git history): plain 2.255 vs fanout 8.474 s
     # at sf1 (-73%; the fan-out exchanged the unfiltered full-width
     # table), 1.479 vs 2.025 at sf0.1
-    li = _t_shuffle_input(spark, sf_dir, "lineitem")
-    orders = _t_shuffle_input(spark, sf_dir, "orders").where(
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders").where(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast(TS))
         & (F.col("o_orderdate") < F.lit("1998-01-01").cast(TS))
     )
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    part = _t(spark, sf_dir, "part").where(F.col("p_type") == "PROMO").select("p_partkey")
+    cust = (
+        load_table(spark, sf_dir, "customer", SCAN_FANOUT_TABLE_MIN_BYTES)
+        .select("c_custkey", "c_nationkey")
+    )
+    supp = (
+        load_table(spark, sf_dir, "supplier", SCAN_FANOUT_TABLE_MIN_BYTES)
+        .select("s_suppkey", "s_nationkey")
+    )
+    part = (
+        load_table(spark, sf_dir, "part", SCAN_FANOUT_TABLE_MIN_BYTES)
+        .where(F.col("p_type") == "PROMO")
+        .select("p_partkey")
+    )
     rev = _revenue()
     nation_rev = F.sum(F.when(F.col("supp_nation") == "NATION_3", rev).otherwise(F.lit(0).cast(DEC)))
     total_rev = F.sum(rev)
@@ -279,12 +291,17 @@ def _q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     # plain lineitem (q8's rule: probes-then-key-shuffle): r10 A/B plain
     # 4.349 vs fanout 8.740 s at sf1 (-50%, won all 6 rounds), 3.355 vs
     # 5.297 at sf0.1 — the 5.05x sf1 pin decomposed to the fan-out
-    li = _t_shuffle_input(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part").where(F.col("p_name").contains("red")).select(
-        "p_partkey", "p_retailprice"
+    li = load_table(spark, sf_dir, "lineitem")
+    part = (
+        load_table(spark, sf_dir, "part", SCAN_FANOUT_TABLE_MIN_BYTES)
+        .where(F.col("p_name").contains("red"))
+        .select("p_partkey", "p_retailprice")
     )
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    supp = (
+        load_table(spark, sf_dir, "supplier", SCAN_FANOUT_TABLE_MIN_BYTES)
+        .select("s_suppkey", "s_nationkey")
+    )
+    nation = load_table(spark, sf_dir, "nation", SCAN_FANOUT_TABLE_MIN_BYTES).select("n_nationkey", "n_name")
     # r11 shuffle-byte narrowing (guide §2.3 "project before the exchange"):
     # the per-row profit DECIMAL is evaluated right after the broadcast
     # probes, so the orderkey exchange feeding the lineitem⋈orders join
@@ -292,9 +309,10 @@ def _q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     # inputs; the orders side ships year(o_orderdate) (int) instead of the
     # timestamp. Decimal arithmetic is per-row and exact, so evaluating it
     # before or after the join is the same function — results asserted
-    # identical. Interleaved A/B (tools/proto_q9_narrow.py): sf1 3.677 →
-    # 3.237 s (−12 %, won 6/6 pairwise), sf0.1 0.674 → 0.619 s (−8 %).
-    orders = _t_shuffle_input(spark, sf_dir, "orders").select(
+    # identical. Interleaved A/B (tools/proto_q9_narrow.py, in git
+    # history): sf1 3.677 → 3.237 s (−12 %, won 6/6 pairwise), sf0.1
+    # 0.674 → 0.619 s (−8 %).
+    orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", F.year("o_orderdate").alias("o_year")
     )
     cost = F.col("p_retailprice").cast(DEC) * F.lit("0.8").cast("decimal(2,1)")
@@ -332,12 +350,12 @@ ORDER BY n_name, o_year DESC
 # ---------------------------------------------------------------------------
 
 def _q11(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # KEEPS the fan-out — measured boundary case of the _t_shuffle_input
-    # rule (r10 interleaved A/B at sf1: fanout 7.806 vs plain 7.646 s, a
+    # KEEPS the fan-out — measured boundary case of the shuffle-input
+    # rule (sources/tables.py) (r10 interleaved A/B at sf1: fanout 7.806 vs plain 7.646 s, a
     # wash inside IQR): the l_partkey groupBy reduces ~30x, so map-side
     # partial aggregation matters about as much as the extra exchange.
     # Do not re-litigate without a new decision criterion.
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem", SCAN_FANOUT_TABLE_MIN_BYTES)
     val = li.groupBy("l_partkey").agg(F.sum(_revenue()).alias("part_value"))
     total = val.agg(F.sum("part_value").alias("total_value"))
     return (
@@ -365,11 +383,11 @@ ORDER BY part_value DESC, l_partkey ASC
 
 def _q12(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffle-bound facts (q3/q5 class): plain loaders
-    li = _t_shuffle_input(spark, sf_dir, "lineitem").where(
+    li = load_table(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= F.lit("1997-01-01").cast(TS))
         & (F.col("l_shipdate") < F.lit("1998-01-01").cast(TS))
     )
-    orders = _t_shuffle_input(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
     high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
@@ -399,10 +417,10 @@ ORDER BY l_linestatus
 # ---------------------------------------------------------------------------
 
 def _q13(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer").select("c_custkey")
+    cust = load_table(spark, sf_dir, "customer", SCAN_FANOUT_TABLE_MIN_BYTES).select("c_custkey")
     # orders feeds the o_custkey shuffle of a left join whose preserved side
     # is customer (so the fact can't be broadcast away) — plain loader
-    orders = _t_shuffle_input(spark, sf_dir, "orders").where(
+    orders = load_table(spark, sf_dir, "orders").where(
         F.col("o_orderpriority") != "5-LOW"
     ).select("o_orderkey", "o_custkey")
     per_cust = (
@@ -434,7 +452,7 @@ ORDER BY custdist DESC, c_count DESC
 # ---------------------------------------------------------------------------
 
 def _q16(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = _t(spark, sf_dir, "part").where(
+    part = load_table(spark, sf_dir, "part", SCAN_FANOUT_TABLE_MIN_BYTES).where(
         (F.col("p_brand") != "Brand#1") & F.col("p_size").isin(1, 4, 9, 16, 25, 36, 49)
     ).select("p_partkey", "p_brand", "p_type", "p_size")
     # plain lineitem: the countDistinct's internal keys are (group cols,
@@ -442,7 +460,7 @@ def _q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the scan is shuffle-bound (q18's evidence class). r10 A/B: plain
     # 2.177 vs fanout 7.133 s at sf1 (-69%, plain's worst beat fanout's
     # best sample)
-    li = _t_shuffle_input(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
+    li = load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
     return (
         li.join(_gated_dim(part, sf_dir, "part"), li.l_partkey == part.p_partkey)
         .groupBy("p_brand", "p_type", "p_size")
@@ -467,12 +485,16 @@ ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
 # ---------------------------------------------------------------------------
 
 def _q17(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = _t(spark, sf_dir, "part").where(F.col("p_brand") == "Brand#3").select("p_partkey")
+    part = (
+        load_table(spark, sf_dir, "part", SCAN_FANOUT_TABLE_MIN_BYTES)
+        .where(F.col("p_brand") == "Brand#3")
+        .select("p_partkey")
+    )
     # lineitem KEEPS the fan-out: the selective Brand#3 semi probe + the
     # l_partkey-grain aggregate reduce strongly before any wide shuffle
     # (the measured q11 wash class). r10 A/B confirmed the wash: plain
     # 1.724 vs fanout 1.732 s at sf1 — do not retry without new evidence.
-    li = _t(spark, sf_dir, "lineitem").join(
+    li = load_table(spark, sf_dir, "lineitem", SCAN_FANOUT_TABLE_MIN_BYTES).join(
         _gated_dim(part, sf_dir, "part"), F.col("l_partkey") == F.col("p_partkey"), "left_semi"
     )
     qty_stats = li.groupBy(F.col("l_partkey").alias("qs_partkey")).agg(
@@ -517,8 +539,11 @@ def _q19(spark: SparkSession, sf_dir: str) -> DataFrame:
     # plain 1.065 vs fanout 5.376 s at sf1 (-80%). Contrast q14, where the
     # pushed shipdate filter shrinks the scan ~24x BEFORE the fan-out
     # exchange and the fan-out measurably wins (0.986 vs 1.148).
-    li = _t_shuffle_input(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
+    li = load_table(spark, sf_dir, "lineitem")
+    part = (
+        load_table(spark, sf_dir, "part", SCAN_FANOUT_TABLE_MIN_BYTES)
+        .select("p_partkey", "p_brand", "p_size")
+    )
     qty = F.col("l_quantity")
     cond = (
         ((F.col("p_brand") == "Brand#1") & (F.col("p_size").between(1, 5)) & qty.between(1, 11))
@@ -549,10 +574,10 @@ WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 5 AND l_quantity BETWEEN 1 A
 
 def _q21(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffle-bound facts (q3/q5 class): plain loaders
-    orders = _t_shuffle_input(spark, sf_dir, "orders").where(F.col("o_orderstatus") == "F").select(
+    orders = load_table(spark, sf_dir, "orders").where(F.col("o_orderstatus") == "F").select(
         "o_orderkey", "o_orderdate"
     )
-    li = _t_shuffle_input(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey", "l_shipdate")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey", "l_shipdate")
     tagged = li.join(orders, li.l_orderkey == orders.o_orderkey).withColumn(
         "late", F.col("l_shipdate") > F.col("o_orderdate")
     )
@@ -573,7 +598,7 @@ def _q21(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min(F.when(F.col("any_late"), F.col("l_suppkey"))).alias("late_supp"),
     )
     waiting = per_order.where((F.col("n_supps") > 1) & (F.col("n_late_supps") == 1))
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
+    supp = load_table(spark, sf_dir, "supplier", SCAN_FANOUT_TABLE_MIN_BYTES).select("s_suppkey", "s_name")
     return (
         waiting.join(_gated_dim(supp, sf_dir, "supplier"), F.col("late_supp") == F.col("s_suppkey"))
         .groupBy("s_name")
@@ -608,9 +633,12 @@ LIMIT 20
 # ---------------------------------------------------------------------------
 
 def _q22(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey", "c_acctbal")
+    cust = (
+        load_table(spark, sf_dir, "customer", SCAN_FANOUT_TABLE_MIN_BYTES)
+        .select("c_custkey", "c_nationkey", "c_acctbal")
+    )
     # orders feeds the o_custkey anti-join shuffle — plain loader
-    orders = _t_shuffle_input(spark, sf_dir, "orders").where(
+    orders = load_table(spark, sf_dir, "orders").where(
         F.col("o_orderdate") >= F.lit("2000-01-01").cast(TS)
     ).select("o_custkey")
     pos = cust.where(F.col("c_acctbal") > 0)
@@ -653,12 +681,16 @@ ORDER BY c_nationkey
 # ---------------------------------------------------------------------------
 
 def _q20(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = _t(spark, sf_dir, "part").where(F.col("p_type") == "STANDARD").select("p_partkey")
+    part = (
+        load_table(spark, sf_dir, "part", SCAN_FANOUT_TABLE_MIN_BYTES)
+        .where(F.col("p_type") == "STANDARD")
+        .select("p_partkey")
+    )
     # plain lineitem: the (l_partkey, l_suppkey) groupBy after the semi
     # probe reduces only a few-fold, so the scan is shuffle-bound — r10
     # A/B: plain 2.461 vs fanout 2.802 s at sf1 (-12%, fully separated
     # samples: plain max 2.698 < fanout min 2.712)
-    li = _t_shuffle_input(spark, sf_dir, "lineitem").join(
+    li = load_table(spark, sf_dir, "lineitem").join(
         _gated_dim(part, sf_dir, "part"), F.col("l_partkey") == F.col("p_partkey"), "left_semi"
     ).select("l_partkey", "l_suppkey", F.col("l_quantity").cast(QTY).alias("qty"))
     per_ps = li.groupBy("l_partkey", "l_suppkey").agg(F.sum("qty").alias("supp_qty"))
@@ -672,7 +704,7 @@ def _q20(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_suppkey")
         .distinct()
     )
-    supp = _t(spark, sf_dir, "supplier")
+    supp = load_table(spark, sf_dir, "supplier", SCAN_FANOUT_TABLE_MIN_BYTES)
     return (
         supp.join(heavy, supp.s_suppkey == heavy.l_suppkey, "left_semi")
         .select("s_suppkey", "s_name")

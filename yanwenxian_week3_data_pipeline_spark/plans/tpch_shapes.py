@@ -27,19 +27,11 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from . import QuerySpec
-from .relational import _gated_dim, _t_shuffle_input
-from ..constants import SCAN_FANOUT_TABLE_MIN_BYTES
-from ..sources.tables import read_parquet_fanout
+from .relational import _gated_dim
+from ..sources.tables import SCAN_FANOUT_TABLE_MIN_BYTES, load_table
 
 DEC = "decimal(18,2)"
 TS = "timestamp_ntz"
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # size-gated under-split-scan fan-out (sources/tables.py)
-    return read_parquet_fanout(
-        spark, f"{sf_dir}/{name}.parquet", SCAN_FANOUT_TABLE_MIN_BYTES
-    )
 
 
 def _revenue() -> F.Column:
@@ -56,13 +48,16 @@ _REV_SQL = f"CAST(l_extendedprice AS {DEC}) * (CAST(1 AS {DEC}) - CAST(l_discoun
 
 def _q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     cutoff = F.lit("1998-06-01").cast(TS)
-    cust = _t(spark, sf_dir, "customer").where(F.col("c_mktsegment") == "BUILDING")
+    cust = (
+        load_table(spark, sf_dir, "customer", SCAN_FANOUT_TABLE_MIN_BYTES)
+        .where(F.col("c_mktsegment") == "BUILDING")
+    )
     # fact loaders: first consumer is the fact-fact key shuffle after pushed
     # filters only — plain scan, no fan-out (r10 interleaved A/B, plain vs
     # fanout warm medians: sf0.1 1.103 vs 1.527 s, sf1 2.418 vs 4.643 s;
     # plain won every round at both scales)
-    orders = _t_shuffle_input(spark, sf_dir, "orders").where(F.col("o_orderdate") < cutoff)
-    li = _t_shuffle_input(spark, sf_dir, "lineitem").where(F.col("l_shipdate") > cutoff)
+    orders = load_table(spark, sf_dir, "orders").where(F.col("o_orderdate") < cutoff)
+    li = load_table(spark, sf_dir, "lineitem").where(F.col("l_shipdate") > cutoff)
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(_gated_dim(cust.select("c_custkey"), sf_dir, "customer"), F.col("o_custkey") == F.col("c_custkey"))
@@ -96,15 +91,15 @@ def _q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffle-bound facts (r10 interleaved A/B: plain 1.136 vs fanout
     # 1.699 s at sf0.1; 2.131 vs 8.820 s at sf1 — the fan-out's extra full
     # exchange of unfiltered lineitem was a 4.1x loss)
-    li = _t_shuffle_input(spark, sf_dir, "lineitem")
-    orders = _t_shuffle_input(spark, sf_dir, "orders").where(
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders").where(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast(TS))
         & (F.col("o_orderdate") < F.lit("1997-01-01").cast(TS))
     )
-    cust = _t(spark, sf_dir, "customer")
-    supp = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
+    cust = load_table(spark, sf_dir, "customer", SCAN_FANOUT_TABLE_MIN_BYTES)
+    supp = load_table(spark, sf_dir, "supplier", SCAN_FANOUT_TABLE_MIN_BYTES)
+    nation = load_table(spark, sf_dir, "nation", SCAN_FANOUT_TABLE_MIN_BYTES)
+    region = load_table(spark, sf_dir, "region", SCAN_FANOUT_TABLE_MIN_BYTES).where(F.col("r_name") == "ASIA")
     asia_nations = nation.join(
         F.broadcast(region), nation.n_regionkey == region.r_regionkey
     ).select("n_nationkey", "n_name")
@@ -139,7 +134,7 @@ GROUP BY n_name
 # ---------------------------------------------------------------------------
 
 def _q6(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem", SCAN_FANOUT_TABLE_MIN_BYTES)
     return (
         li.where(
             (F.col("l_shipdate") >= F.lit("1996-01-01").cast(TS))
@@ -170,15 +165,16 @@ WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-0
 # ---------------------------------------------------------------------------
 
 def _q10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # same shuffle-bound fact-fact shape as q3 — plain loaders by the
-    # _t_shuffle_input decision rule (pushed filters, then the key shuffle)
-    li = _t_shuffle_input(spark, sf_dir, "lineitem").where(F.col("l_returnflag") == "R")
-    orders = _t_shuffle_input(spark, sf_dir, "orders").where(
+    # same shuffle-bound fact-fact shape as q3 — plain scans by the
+    # shuffle-input rule of sources/tables.py (pushed filters, then the
+    # key shuffle)
+    li = load_table(spark, sf_dir, "lineitem").where(F.col("l_returnflag") == "R")
+    orders = load_table(spark, sf_dir, "orders").where(
         (F.col("o_orderdate") >= F.lit("1997-01-01").cast(TS))
         & (F.col("o_orderdate") < F.lit("1997-07-01").cast(TS))
     )
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
+    cust = load_table(spark, sf_dir, "customer", SCAN_FANOUT_TABLE_MIN_BYTES)
+    nation = load_table(spark, sf_dir, "nation", SCAN_FANOUT_TABLE_MIN_BYTES)
     return (
         li.join(orders.select("o_orderkey", "o_custkey"), li.l_orderkey == F.col("o_orderkey"))
         .join(_gated_dim(cust, sf_dir, "customer"), F.col("o_custkey") == F.col("c_custkey"))
@@ -215,11 +211,11 @@ def _q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the fan-out exchange, and what follows is probe + global agg with no
     # key shuffle (true q1-class map work). r10 A/B: fanout 0.986 vs plain
     # 1.148 s at sf1 (-14%) — do not retry without new evidence.
-    li = _t(spark, sf_dir, "lineitem").where(
+    li = load_table(spark, sf_dir, "lineitem", SCAN_FANOUT_TABLE_MIN_BYTES).where(
         (F.col("l_shipdate") >= F.lit("1997-01-01").cast(TS))
         & (F.col("l_shipdate") < F.lit("1997-04-01").cast(TS))
     )
-    part = _t(spark, sf_dir, "part").select("p_partkey", "p_type")
+    part = load_table(spark, sf_dir, "part", SCAN_FANOUT_TABLE_MIN_BYTES).select("p_partkey", "p_type")
     rev = _revenue()
     promo = F.sum(F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0).cast(DEC)))
     total = F.sum(rev)
@@ -254,11 +250,11 @@ def _q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     # plain 1.066 vs fanout 1.634 s at sf1, -35%). q14 filters the same
     # date range but aggregates globally (no key shuffle) and KEEPS the
     # fan-out on its measured win.
-    li = _t_shuffle_input(spark, sf_dir, "lineitem").where(
+    li = load_table(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= F.lit("1997-01-01").cast(TS))
         & (F.col("l_shipdate") < F.lit("1997-04-01").cast(TS))
     )
-    supp = _t(spark, sf_dir, "supplier")
+    supp = load_table(spark, sf_dir, "supplier", SCAN_FANOUT_TABLE_MIN_BYTES)
     rev = (
         li.groupBy("l_suppkey")
         .agg(F.sum(_revenue()).alias("total_revenue"))
@@ -294,9 +290,9 @@ def _q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     # it behaves like a raw key shuffle — r10 interleaved A/B at sf1: plain
     # 7.629 vs fanout 10.995 s (-31%, plain won all 6 rounds). orders feeds
     # the o_orderkey join directly.
-    li = _t_shuffle_input(spark, sf_dir, "lineitem")
-    orders = _t_shuffle_input(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer", SCAN_FANOUT_TABLE_MIN_BYTES)
     # r11 shuffle-byte narrowing (guide §2.3 "narrower types"): the partial
     # aggregate sums the EXACT scaled integer cast(qty_dec * 10 as long)
     # instead of the decimal — qty_dec is the same cast(l_quantity as
@@ -306,7 +302,7 @@ def _q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact decimal product (27,0)×(2,1). The shuffle row drops from a
     # 16-byte non-compact decimal(28,1) buffer to an 8-byte long, and the
     # agg codegen works in long arithmetic. Results asserted identical
-    # (tools/proto_q18_narrow.py; the top-level decimal is canonicalized
+    # (tools/proto_q18_narrow.py, in git history; the top-level decimal is canonicalized
     # to double either way). Interleaved A/B, fully separated samples both
     # scales: sf1 4.158 → 3.159 s (−24 %), sf0.1 0.667 → 0.517 s (−22 %).
     scaled = (F.col("l_quantity").cast("decimal(18,1)") * 10).cast("long")
@@ -342,7 +338,7 @@ JOIN customer ON o_custkey = c_custkey
 # ---------------------------------------------------------------------------
 
 def _q_first_last(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders", SCAN_FANOUT_TABLE_MIN_BYTES)
     w = (
         Window.partitionBy("o_custkey")
         .orderBy(F.asc("o_orderdate"), F.asc("o_orderkey"))
@@ -377,7 +373,7 @@ WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate ASC, o_orderkey ASC
 # ---------------------------------------------------------------------------
 
 def _q_percent_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    supp = _t(spark, sf_dir, "supplier")
+    supp = load_table(spark, sf_dir, "supplier", SCAN_FANOUT_TABLE_MIN_BYTES)
     w = Window.partitionBy("s_nationkey").orderBy(F.asc("s_acctbal"), F.asc("s_suppkey"))
     return supp.select(
         "s_nationkey",

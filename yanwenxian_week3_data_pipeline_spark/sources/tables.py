@@ -1,9 +1,11 @@
-"""Parquet table loaders for the driver-materialized star schema
-(see /root/repo/TESTDATA.md): region nation customer supplier part orders
-lineitem events documents embeddings.
+"""Parquet table loader for the driver-materialized star schema
+(see TESTDATA.md): region nation customer supplier part orders lineitem
+events documents embeddings.
 
-Plain ``spark.read.parquet`` — Catalyst handles column pruning and filter
-pushdown; do NOT pre-collect or pre-filter here.
+``load_table`` is the only code that reads one of these tables: a plain
+``spark.read.parquet`` (Catalyst handles column pruning and filter
+pushdown; do NOT pre-collect or pre-filter here), the declared read schema
+where a table has one, and the caller's optional scan fan-out.
 """
 
 from __future__ import annotations
@@ -27,18 +29,49 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+# Declared read schemas. The driver parquet stores events.ts as
+# TIMESTAMP(MICROS, isAdjustedToUTC=false); the explicit schema forces NTZ
+# even in a session where ``spark.sql.parquet.inferTimestampNTZ.enabled`` is
+# off (which would otherwise surface it as LTZ in the session timezone). No
+# session conf is mutated — loads must be side-effect free so concurrent
+# queries sharing one session never race on reader behavior.
+_SCHEMAS = {
+    "events": (
+        "event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, "
+        "event_type STRING, value DOUBLE, props STRING"
+    ),
+}
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if name not in TABLES:
-        raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+# Scan fan-out floors (``fanout_min_bytes`` of ``load_table``): fan out only
+# when the map work over the scan can pay for the extra shuffle. Below the
+# floor the fan-out is a measured LOSS (round-4 sf0.1); above it, measured
+# sf1 wins: q1 5.9 → 2.9 s, minhash 14.1 → 7.4 s.
+#   TABLE  — relational tables do cheap columnar arithmetic per byte.
+#   TEXT   — documents scans carry heavy per-byte map work (tokenize,
+#            32 md5s per shingle).
+#   SUFFIX — suffix-grain queries (docs_lrs_*) multiply map work by LRS_CAP
+#            (~30x), so their fan-out pays at ~30x smaller inputs.
+# The choice belongs to the consumer, not the table: a scan whose FIRST
+# consumer is a key shuffle (join, window, near-unique groupBy/distinct,
+# also after broadcast probes) passes None, because the one-split scan must
+# serialize the shuffle write either way and the round-robin exchange only
+# re-ships the post-pushdown scan. Interleaved warm-median A/Bs, plain vs
+# fan-out: join_region_revenue sf1 6.3 vs 14.2 s (r9); q5 sf1 2.131 vs
+# 8.820, q3 sf1 2.418 vs 4.643, q18 sf1 7.629 vs 10.995 (r10); q8 2.255 vs
+# 8.474, q9 4.349 vs 8.740, q19 1.065 vs 5.376 (r10 pin sweep). The fan-out
+# keeps map-heavy consumers: per-row expression work or low-cardinality
+# partial aggs (q1 class), a pushed filter followed by probes with no key
+# shuffle (q14 0.986 vs 1.148), and washes (q11/q17 partkey grain).
+SCAN_FANOUT_TABLE_MIN_BYTES = 8 << 20
+SCAN_FANOUT_TEXT_MIN_BYTES = 2 << 20
+SCAN_FANOUT_SUFFIX_MIN_BYTES = 256 << 10
 
 
 def _local_parquet_bytes(path: str) -> int | None:
     """Driver-side total byte size of a local parquet file or directory of
     part files; None when the path is not a local filesystem path (object
-    stores return None → the fan-out below self-disables, since at real
-    cluster scale scans have many splits anyway)."""
+    stores return None → the fan-out self-disables, since at real cluster
+    scale scans have many splits anyway)."""
     p = path[len("file:") :] if path.startswith("file:") else path
     if not os.path.exists(p):
         return None
@@ -54,37 +87,43 @@ def _local_parquet_bytes(path: str) -> int | None:
     return total
 
 
-def read_parquet_fanout(
-    spark: SparkSession, path: str, min_bytes: int
+def load_table(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    fanout_min_bytes: int | None = None,
 ) -> DataFrame:
-    """``spark.read.parquet`` plus a SIZE-GATED scan fan-out for
-    under-split inputs.
+    """Read registry table ``name`` under ``sf_dir``.
 
-    Parquet parallelism is bounded by row groups: a single small-file
-    table (the driver testdata layout — one file, one row group) is ONE
-    input split no matter how many cores exist, so every map-side
-    operator over it (tokenize + 32 md5s per shingle for MinHash, the
-    decimal partial aggregates of Q1) runs on one core. Measured at the
-    sf1-equivalent set: q1 5.9 s → 2.9 s, dedup_minhash_lsh 14.1 s →
-    7.4 s from one explicit round-robin repartition after the scan.
-
-    The gate keeps the repartition out of every case where it cannot pay:
-      - total bytes < ``min_bytes``  → the map work is too small to beat
-        the shuffle + task overhead (the round-4 sf0.1 measurement that
-        rejected an unconditional loader fan-out);
+    ``fanout_min_bytes=None`` is a plain scan. An int adds a SIZE-GATED
+    round-robin fan-out for under-split inputs: parquet parallelism is
+    bounded by row groups, so a single small-file table (the driver
+    testdata layout — one file, one row group) is ONE input split no matter
+    how many cores exist, and every map-side operator over it runs on one
+    core. The gate keeps the repartition out of every case where it cannot
+    pay:
+      - total bytes < ``fanout_min_bytes`` → the map work is too small to
+        beat the shuffle + task overhead;
       - estimated splits (total / spark.sql.files.maxPartitionBytes)
         already ≥ defaultParallelism → the scan parallelizes by itself —
-        this is the 100 TB case, where the helper is a no-op by
-        construction;
+        the 100 TB case, where the fan-out is a no-op by construction;
       - non-local path → size unknown, assume real-scale storage.
 
     Values are partitioning-independent for every registered query
-    (proven by the local[4]/local[8] full sweeps), so this is a pure
-    plan-level change.
+    (proven by the local[4]/local[8] full sweeps), so the fan-out is a
+    pure plan-level choice.
     """
-    df = spark.read.parquet(path)
+    if name not in TABLES:
+        raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    reader = spark.read
+    if name in _SCHEMAS:
+        reader = reader.schema(_SCHEMAS[name])
+    df = reader.parquet(path)
+    if fanout_min_bytes is None:
+        return df
     total = _local_parquet_bytes(path)
-    if total is None or total < min_bytes:
+    if total is None or total < fanout_min_bytes:
         return df
     try:
         mpb_raw = spark.conf.get("spark.sql.files.maxPartitionBytes")
@@ -97,21 +136,6 @@ def read_parquet_fanout(
     if est_splits >= par:
         return df
     return df.repartition(par)
-
-
-def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Load events with ``ts`` as TIMESTAMP_NTZ, independent of session
-    configuration. The driver parquet stores ``ts`` as TIMESTAMP(MICROS,
-    isAdjustedToUTC=false); an explicit read schema forces NTZ even in a
-    session where ``spark.sql.parquet.inferTimestampNTZ.enabled`` is off
-    (which would otherwise surface it as LTZ in the session timezone). No
-    session conf is mutated here — loaders must be side-effect free so
-    concurrent queries sharing one session never race on reader behavior."""
-    schema = (
-        "event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, "
-        "event_type STRING, value DOUBLE, props STRING"
-    )
-    return spark.read.schema(schema).parquet(os.path.join(sf_dir, "events.parquet"))
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -40,6 +40,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ..sources.tables import load_table
+
 EVENT_STREAM_SCHEMA = StructType(
     [
         StructField("event_id", LongType(), True),
@@ -339,7 +341,7 @@ def enrich_stream(
     a broadcast, so enrichment adds NO stateful shuffle; only the windowed
     aggregate keeps state, bounded by the watermark."""
     dim = (
-        spark.read.parquet(f"{sf_dir}/customer.parquet")
+        load_table(spark, sf_dir, "customer")
         .select((F.col("c_custkey") - 1).alias("user_id"), "c_nationkey")
     )
     ev = read_event_stream(spark, src_dir)

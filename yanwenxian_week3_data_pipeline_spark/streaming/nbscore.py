@@ -25,6 +25,7 @@ from ..constants import NB_BUCKETS, NB_SPLIT_SEED
 from ..functions.hashing import hash60_expr
 from ..functions.text import clean_text_expr
 from ..functions.textstats import tokens_expr
+from ..sources.tables import load_table
 
 
 def nb_train_model(
@@ -37,7 +38,7 @@ def nb_train_model(
     import math
 
     d = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        load_table(spark, sf_dir, "documents")
         .select("doc_id", "lang", clean_text_expr(F.col("text")).alias("c"))
         .where(F.col("lang").isNotNull())
     )
