@@ -168,12 +168,24 @@ def test_read_parquet_fanout_gates(spark, tmp_path, monkeypatch):
     # measured sizes: the tiny file stays put, the big one fans out
     assert load_table(spark, small, "documents", 1 << 20).rdd.getNumPartitions() == 1
     fanned = load_table(spark, big, "documents", 1 << 20)
+    assert fans_out(fanned)
     assert fanned.rdd.getNumPartitions() == par
     # values identical, only the partitioning moved
     assert fanned.count() == 300_000
     assert not fans_out(load_table(spark, big, "documents"))
 
     old = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    try:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", str(16 << 10))
+        # measured size / 16KB >> cores -> no extra repartition node, and
+        # the scan really does split by itself
+        df = load_table(spark, big, "documents", 1 << 20)
+        assert df.rdd.getNumPartitions() > 1
+        assert not fans_out(df)
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+
+    # each caller floor, with the on-disk size pinned either side of it
     for floor in (
         tables.SCAN_FANOUT_TABLE_MIN_BYTES,
         tables.SCAN_FANOUT_TEXT_MIN_BYTES,
