@@ -116,11 +116,12 @@ def main() -> None:
     SUBSEC_THRESHOLD = float(os.environ.get("SPARK_GRAFT_BENCH_SUBSEC", "0.6"))
     SUBSEC_EXTRA_RUNS = 4 if WARM_RUNS >= 5 else 0
 
-    def run_set(names: dict | list) -> tuple[dict, dict, dict, dict, dict]:
+    def run_set(names: dict | list) -> tuple[dict, dict, dict, dict, dict, dict]:
         timings: dict[str, float] = {}
         cold: dict[str, float] = {}
         iqr: dict[str, float] = {}
         samples: dict[str, list[float]] = {}
+        counts: dict[str, int] = {}
         loads: dict[str, list[float | None]] = {}
         for name in sorted(names):
             spec = registry[name]
@@ -155,16 +156,20 @@ def main() -> None:
             # statistics below are still computed over EVERY warm sample;
             # today's default protocol (5 warm + 4 sub-second extras)
             # emits at most 9 anyway, so the cap only binds if a caller
-            # raises SPARK_GRAFT_BENCH_WARM. Keys and semantics unchanged.
+            # raises SPARK_GRAFT_BENCH_WARM; then ``warm_run_count`` says
+            # how many samples the median and IQR cover.
             samples[name] = warm[-9:]
+            if len(warm) > len(samples[name]):
+                counts[name] = len(warm)
             timings[name] = round(statistics.median(sorted(warm)), 3)
             q = statistics.quantiles(sorted(warm), n=4, method="inclusive")
             iqr[name] = round(q[2] - q[0], 3)
             loads[name] = [load_at_start, _load1m()]
-        return timings, cold, iqr, samples, loads
+        return timings, cold, iqr, samples, loads, counts
 
-    timings, cold, iqr, samples, loads = run_set(specs)
-    ext_timings, ext_cold, ext_iqr, ext_samples, ext_loads = run_set(EXTENDED)
+    timings, cold, iqr, samples, loads, counts = run_set(specs)
+    ext_timings, ext_cold, ext_iqr, ext_samples, ext_loads, ext_counts = run_set(EXTENDED)
+    counts.update(ext_counts)
     load_end = _load1m()
 
     # Contamination flag: the bench's OWN 32-thread bursts push the 1-min
@@ -218,6 +223,7 @@ def main() -> None:
                 "extended_load_1m_per_query": ext_loads,
                 "load_1m_max": round(max(observed), 2) if observed else None,
                 "load_contaminated": contaminated,
+                **({"warm_run_count": counts} if counts else {}),
             }
         )
     )

@@ -182,3 +182,34 @@ def test_second_strike_confirms_real_regression(br, spark, sf_dir, tmp_path, mon
         ["x", _write(tmp_path, "n.json", new), _write(tmp_path, "b.json", base)],
     )
     assert br.main() == 1
+
+
+def test_baseline_uses_line_median_when_samples_capped(tmp_path, monkeypatch, capsys):
+    """bench.py emits only the last 9 warm samples. When a query ran more
+    (``warm_run_count``), the baseline takes the line's own median and IQR,
+    which cover every sample, and says so; an uncapped query is still
+    recomputed from its samples."""
+    path = Path(__file__).resolve().parents[1] / "tools" / "make_bench_baseline.py"
+    spec = importlib.util.spec_from_file_location("make_bench_baseline", path)
+    mbb = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mbb)
+
+    tail = [2.0] * 9  # the last 9 of 15 samples: six 1.0 s runs came first
+    line = {
+        "sf": 0.1,
+        "queries": {"q_capped": 1.5, "q_plain": 9.9},
+        "iqr_sec": {"q_capped": 1.0, "q_plain": 9.9},
+        "warm_samples_sec": {"q_capped": tail, "q_plain": [1.0, 2.0, 3.0]},
+        "extended_queries": {},
+        "extended_iqr_sec": {},
+        "extended_warm_samples_sec": {},
+        "warm_run_count": {"q_capped": 15},
+    }
+    out = tmp_path / "baseline.json"
+    monkeypatch.setattr(mbb, "BASELINE", str(out))
+    monkeypatch.setattr("sys.argv", ["x", _write(tmp_path, "line.json", line), "--source", "t"])
+    assert mbb.main() == 0
+    base = json.loads(out.read_text())
+    assert base["queries"] == {"q_capped": 1.5, "q_plain": 2.0}
+    assert base["iqr_sec"] == {"q_capped": 1.0, "q_plain": 1.0}
+    assert "WARNING q_capped" in capsys.readouterr().err

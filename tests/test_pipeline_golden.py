@@ -212,19 +212,29 @@ def test_cli_main(spark, fixture_path, tmp_path_factory, capsys):
 
 
 def test_observe_funnel_matches_aggregate(spark, fixture_path):
-    """The observe()-metrics funnel (zero extra jobs — metrics piggyback on
-    the consuming action) reports the same numbers as the aggregate pass:
-    17 loaded -> 13 complete -> 11 deduped -> 4 valid."""
+    """The observe()-metrics report (zero extra jobs — metrics piggyback on
+    the consuming action) carries the funnel, 17 loaded -> 13 complete ->
+    11 deduped -> 4 valid, and the completeness and date-range aggregates of
+    the 11 deduped rows, all from the one kept-row collect."""
     from yanwenxian_week3_data_pipeline_spark.pipeline import (
-        attach_funnel_observation,
         clean_articles,
         flag_stages,
+        observe_report,
     )
     from yanwenxian_week3_data_pipeline_spark.sources.articles_json import load_articles
 
     flagged = flag_stages(clean_articles(load_articles(spark, fixture_path)))
-    observed, obs = attach_funnel_observation(flagged, "funnel_test")
-    n_sink_rows = observed.where(F.col("_kept") & F.col("passed")).count()
+    observed, obs = observe_report(flagged)
+    kept = observed.where(F.col("_kept")).select("passed").collect()
     got = obs.get
-    assert got == {"n_load": 17, "n_complete": 13, "n_dedup": 11, "n_valid": 4}
-    assert n_sink_rows == got["n_valid"]
+    funnel = {k: got[k] for k in ("n_load", "n_complete", "n_dedup", "n_valid")}
+    assert funnel == {"n_load": 17, "n_complete": 13, "n_dedup": 11, "n_valid": 4}
+    assert len(kept) == got["n_dedup"]
+    assert sum(r.passed for r in kept) == got["n_valid"]
+    assert (got["dr_earliest"], got["dr_latest"], got["dr_n"]) == (
+        "2025-01-15 00:00:00",
+        "2025-07-01 00:00:00",
+        9,
+    )
+    assert (got["_has_author"], got["_has_source"]) == (True, False)
+    assert (got["_ne_author"], got["_ne_title"], got["_ne_published_date"]) == (1, 11, 11)

@@ -176,12 +176,14 @@ def test_read_parquet_fanout_gates(spark, tmp_path, monkeypatch):
 
     old = spark.conf.get("spark.sql.files.maxPartitionBytes")
     try:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", str(16 << 10))
-        # measured size / 16KB >> cores -> no extra repartition node, and
-        # the scan really does split by itself
-        df = load_table(spark, big, "documents", 1 << 20)
-        assert df.rdd.getNumPartitions() > 1
-        assert not fans_out(df)
+        # the byte count and its unit-string form read the same
+        for mpb in (str(16 << 10), "16k"):
+            spark.conf.set("spark.sql.files.maxPartitionBytes", mpb)
+            # measured size / 16KB >> cores -> no extra repartition node,
+            # and the scan really does split by itself
+            df = load_table(spark, big, "documents", 1 << 20)
+            assert df.rdd.getNumPartitions() > 1
+            assert not fans_out(df)
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
 
@@ -198,10 +200,14 @@ def test_read_parquet_fanout_gates(spark, tmp_path, monkeypatch):
         assert fans_out(at_floor)
         assert at_floor.rdd.getNumPartitions() == par
         try:
+            # 128 MB as a unit string is one estimated split, as in bytes
+            spark.conf.set("spark.sql.files.maxPartitionBytes", "128m")
+            assert fans_out(load_table(spark, big, "documents", floor))
             # estimated splits = floor / (floor // par) >= cores -> no
-            # extra repartition node
-            spark.conf.set("spark.sql.files.maxPartitionBytes", str(floor // par))
-            assert not fans_out(load_table(spark, big, "documents", floor))
+            # extra repartition node, in bytes and in KB
+            for mpb in (str(floor // par), f"{(floor // par) >> 10}k"):
+                spark.conf.set("spark.sql.files.maxPartitionBytes", mpb)
+                assert not fans_out(load_table(spark, big, "documents", floor))
         finally:
             spark.conf.set("spark.sql.files.maxPartitionBytes", old)
 

@@ -14,8 +14,11 @@ The baseline file drives tools/bench_regression.py. It holds, per query:
 
 - ``queries`` / ``extended_queries``: warm medians recomputed from the
   bench line's ``warm_samples_sec`` (NOT the line's own medians — the
-  recompute is the audit that the medians match their samples);
-- ``iqr_sec`` / ``extended_iqr_sec``: warm IQRs, same recompute;
+  recompute is the audit that the medians match their samples). A query
+  listed in the line's ``warm_run_count`` ran more warm samples than the
+  line emits (bench.py keeps the last 9), so the recompute would cover
+  only a tail: the tool warns and takes the line's own median instead;
+- ``iqr_sec`` / ``extended_iqr_sec``: warm IQRs, same rule;
 - ``isolated_sec`` / ``isolated_iqr_sec`` (with ``--isolated``): a
   median + IQR measured the way the tripwire's SECOND STRIKE measures —
   a FRESH Spark JVM per query (own subprocess), 1 cold + 9 warm runs,
@@ -153,13 +156,22 @@ def main() -> int:
         line = json.loads(f.read().strip().splitlines()[-1])
 
     base: dict = {"sf": line.get("sf", 0.1)}
+    capped = line.get("warm_run_count", {})
     for sec, med_key, iqr_key in (
         ("warm_samples_sec", "queries", "iqr_sec"),
         ("extended_warm_samples_sec", "extended_queries", "extended_iqr_sec"),
     ):
         meds, iqrs = {}, {}
         for name, samples in sorted(line.get(sec, {}).items()):
-            meds[name], iqrs[name] = _med_iqr([float(x) for x in samples])
+            if name in capped:
+                print(
+                    f"make-bench-baseline: WARNING {name}: the line emits {len(samples)} of "
+                    f"{capped[name]} warm samples; using the line's own median and IQR",
+                    file=sys.stderr,
+                )
+                meds[name], iqrs[name] = line[med_key][name], line[iqr_key][name]
+            else:
+                meds[name], iqrs[name] = _med_iqr([float(x) for x in samples])
         base[med_key], base[iqr_key] = meds, iqrs
 
     if isolated:

@@ -72,39 +72,22 @@ def main(argv: list[str] | None = None, spark=None) -> int:
             return 0
 
         if args.validate_only:
-            from pyspark.sql import functions as F
-
             from .domains.articles import article_rules
             from .operators.validate import with_validation
-            from .report import ValidationStats, render_validation_report
+            from .pipeline import validation_stats
+            from .report import render_validation_report
             from .schema import RECORD_ID
             from .sources.articles_json import load_articles
 
-            flagged = with_validation(load_articles(spark, args.input), article_rules()).cache()
-            total = flagged.count()
-            passed = flagged.where(F.col("passed")).count()
-            failed = flagged.where(~F.col("passed"))
-            dist = [
-                (r["reason"], int(r["n"]))
-                for r in failed.groupBy("reason")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .orderBy(F.desc("n"), F.asc("reason"))
-                .collect()
-            ]
-            details = [
-                {"index": int(r[RECORD_ID]), "reason": r["reason"], "message": r["message"]}
-                for r in failed.select(RECORD_ID, "reason", "message")
-                .orderBy(RECORD_ID)
-                .collect()
-            ]
-            stats = ValidationStats(
-                total=total,
-                passed=passed,
-                failed=total - passed,
-                failure_reasons=dist,
-                failed_record_details=details,
+            # one collect; record_ids are dense from 0, so a row's position
+            # in record_id order is its index
+            rows = sorted(
+                with_validation(load_articles(spark, args.input), article_rules())
+                .select(RECORD_ID, "passed", "reason", "message")
+                .collect(),
+                key=lambda r: r[RECORD_ID],
             )
-            print(render_validation_report(stats))
+            print(render_validation_report(validation_stats(rows)))
             return 0
 
         from .pipeline import run_cleaning_pipeline

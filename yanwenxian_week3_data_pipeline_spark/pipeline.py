@@ -4,23 +4,34 @@ run_cleaning_pipeline, cleaner.py:284-393):
 load → text clean → date standardize → drop incomplete → dedup (keep-first)
 → validate → save valid JSON + quality report.
 
-Spark shape: SINGLE-PASS. One scan computes per-row stage-survival flags
+Spark shape: ONE ACTION. One scan computes per-row stage-survival flags
 (_complete, _kept, passed) — the same shape as the flagship funnel query —
-and one cached frame feeds every report aggregate and the valid-row sink.
-The staged form (a cached DataFrame per stage, counted one by one) paid
-three cache writes of wide string frames; at 100 TB it would re-scan and
-re-clean the table once per stage. Here the table is read once, shuffled
-once (the dedup-key window), and every count is a conditional sum over the
-flags. Returns the cleaned post-dedup DataFrame exactly as the reference
-does (cleaner.py:393).
+so the table is read once, shuffled once (the dedup-key window), and every
+count is a conditional sum over the flags. Every scalar of the report
+(stage funnel, column presence, completeness, date range) is a
+``df.observe()`` metric on the flagged frame, and the only action over it
+is a plain ``collect()`` of the kept rows: record_id and the verdict, plus
+the report columns only where the row passed, so a failed row ships only
+its verdict. The metrics come from that same execution because it is the only
+one: no orderBy or range exchange sits after ``observe`` (a range
+exchange's sampling job would run the observed lineage a second time),
+nothing is cached, and nothing is checkpointed. The driver sorts the kept
+rows by record_id and derives the rest from that one list: the
+post-dedup index, the failure distribution, the failed-record details and
+the valid records. All of it reaches the driver by the reference's
+contract anyway (the pretty JSON array and the report's failed-record
+details, sinks/json_records.py), so the kept rows must fit the driver and
+``spark.driver.maxResultSize``. Returns the cleaned post-dedup DataFrame
+exactly as the reference does (cleaner.py:393).
 """
 
 from __future__ import annotations
 
-from datetime import timezone
+from collections import Counter
+from datetime import datetime, timezone
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from .domains.articles import article_rules
@@ -34,6 +45,7 @@ from .sinks.json_records import save_records_pretty, save_text
 from .sources.articles_json import load_articles
 
 ISO_TS_FORMAT = "yyyy-MM-dd'T'HH:mm:ss'Z'"
+FLAG_COLUMNS = ("_complete", "_kept", "passed", "reason", "message")
 
 
 def clean_articles(df: DataFrame) -> DataFrame:
@@ -75,25 +87,79 @@ def flag_stages(cleaned: DataFrame) -> DataFrame:
     return with_validation(flagged, article_rules())
 
 
-def attach_funnel_observation(flagged: DataFrame, name: str = "funnel"):
-    """Attach the stage funnel as ``df.observe()`` metrics: (observed_df,
-    Observation). The metrics accumulate inside whatever action consumes
-    ``observed_df`` (typically the valid-rows sink), so the funnel costs
-    ZERO extra jobs — at 100 TB this replaces a whole second scan-aggregate
-    pass with accumulator traffic piggybacked on the write. The metric
-    expressions are the exact aggregates ``run_cleaning_pipeline`` computes,
-    so both paths report identical numbers (pinned by test)."""
-    from pyspark.sql import Observation
+def _report_candidates(flagged: DataFrame) -> list[str]:
+    """Input columns the report may list: every column the flagged frame
+    carries except record_id, the derived published_date and the flags."""
+    return [c for c in flagged.columns if c not in (RECORD_ID, "published_date", *FLAG_COLUMNS)]
 
-    obs = Observation(name)
-    observed = flagged.observe(
-        obs,
+
+def observe_report(flagged: DataFrame) -> tuple[DataFrame, Observation]:
+    """Attach every scalar the quality report needs to a flagged frame as
+    ``df.observe()`` metrics: (observed_df, Observation). The metrics are
+    the stage funnel, column presence, per-column completeness of the
+    deduped set and its date range. They accumulate inside whatever action
+    consumes ``observed_df``, so they cost ZERO extra jobs — at 100 TB this
+    replaces a whole second scan-aggregate pass with accumulator traffic
+    piggybacked on the one action."""
+    kept = F.col("_kept")
+    # published_date strings are ISO-with-Z (UTC). The range is taken as
+    # TIMESTAMP_NTZ and shipped as its string, so neither the session time
+    # zone (parsing) nor the driver's (rendering) can shift it.
+    ts = F.to_timestamp_ntz(F.col("published_date"), F.lit(ISO_TS_FORMAT))
+    metrics = [
         F.count(F.lit(1)).alias("n_load"),
         F.sum(F.col("_complete").cast("long")).alias("n_complete"),
-        F.sum(F.col("_kept").cast("long")).alias("n_dedup"),
-        F.sum((F.col("_kept") & F.col("passed")).cast("long")).alias("n_valid"),
+        F.sum(kept.cast("long")).alias("n_dedup"),
+        F.sum((kept & F.col("passed")).cast("long")).alias("n_valid"),
+        F.min(F.when(kept, ts)).cast("string").alias("dr_earliest"),
+        F.max(F.when(kept, ts)).cast("string").alias("dr_latest"),
+        F.count(F.when(kept, ts)).alias("dr_n"),
+    ]
+    candidates = _report_candidates(flagged)
+    # presence is tested on the CLEANED values, where clean_text has already
+    # coalesced absent columns to "" — so "ever non-blank" is the signal
+    # that the input carried the column (an input column holding only blank
+    # strings is indistinguishable post-clean; documented edge)
+    for c in candidates:
+        metrics.append(
+            F.max(F.col(c).isNotNull() & (F.trim(F.col(c).cast("string")) != "")).alias(f"_has_{c}")
+        )
+    # completeness replicates the golden's counting (cleaner.py:199-200
+    # astype(str) rendering): a value is missing only when it is a non-null
+    # string that trims to "" — a null renders as 'None'/'NaN' and counts as
+    # present. quality_report.txt:26 (published_date 100.0% with one null
+    # parsed date) pins this; the funnel's drop-incomplete stage keeps the
+    # intended null=missing semantics (SURVEY.md §1.4).
+    for c in candidates + ["published_date"]:
+        blank = F.col(c).isNotNull() & (F.trim(F.col(c).cast("string")) == "")
+        metrics.append(F.sum(F.when(kept & ~blank, 1).otherwise(0)).cast("long").alias(f"_ne_{c}"))
+    obs = Observation("report")
+    return flagged.observe(obs, *metrics), obs
+
+
+def validation_stats(rows: list) -> ValidationStats:
+    """The validation section of a report from validated rows in record_id
+    order (fields ``passed``, ``reason``, ``message``). A row's list position
+    is the reference's row index: after dedup the frame is re-indexed
+    (cleaner.py reset_index), so the index counts kept rows, not ingest ids.
+    ``Counter.most_common`` orders the distribution by count, ties by first
+    occurrence — the reference's own rule (validator.py:155)."""
+    failed = [(i, r) for i, r in enumerate(rows) if not r["passed"]]
+    return ValidationStats(
+        total=len(rows),
+        passed=len(rows) - len(failed),
+        failed=len(failed),
+        failure_reasons=Counter(r["reason"] for _, r in failed).most_common(),
+        failed_record_details=[
+            {"index": i, "reason": r["reason"], "message": r["message"]} for i, r in failed
+        ],
     )
-    return observed, obs
+
+
+def _utc(iso: str) -> datetime:
+    # the reference renders the range as tz-aware pandas Timestamps
+    # ('... 00:00:00+00:00')
+    return datetime.fromisoformat(iso).replace(tzinfo=timezone.utc)
 
 
 def run_cleaning_pipeline(
@@ -107,149 +173,58 @@ def run_cleaning_pipeline(
         if verbose:
             print(msg)
 
-    # 1-3. load → clean → flag (one scan, one window shuffle, one cache)
-    raw = load_articles(spark, str(input_path))
-    flagged = flag_stages(clean_articles(raw)).cache()
-    kept = F.col("_kept")
+    # 1-3. load → clean → flag (one scan, one window shuffle)
+    flagged = flag_stages(clean_articles(load_articles(spark, str(input_path))))
+    candidates = _report_candidates(flagged)
+    observed, obs = observe_report(flagged)
 
+    # the one action: kept rows only, report columns only where they passed
+    passed = F.col("passed")
+    rows = (
+        observed.where(F.col("_kept"))
+        .select(
+            RECORD_ID, "passed", "reason", "message",
+            *(F.when(passed, F.col(c)).alias(c) for c in candidates + ["published_date"]),
+        )
+        .collect()
+    )
+    rows.sort(key=lambda r: r[RECORD_ID])
+    m = obs.get
+
+    n_load, n_complete, n_dedup, n_valid = (
+        m["n_load"],
+        m["n_complete"] or 0,
+        m["n_dedup"] or 0,
+        m["n_valid"] or 0,
+    )
     # report column set mirrors the reference's pandas frame: only columns
     # the input actually carried (a schema-padding column that is all-null
     # never existed in the source JSON), in schema order, with the derived
     # published_date appended LAST (cleaner.py:311-312 appends it to the
-    # frame). Presence is decided by the same single aggregate pass below.
-    candidate_cols = [c for c in raw.columns if c not in (RECORD_ID, "published_date")]
-
-    # one aggregate job produces every scalar the report needs: the stage
-    # funnel, pass counts, column presence, per-column completeness of the
-    # deduped set, and the date range of the deduped set
-    ts = F.to_timestamp(F.col("published_date"), ISO_TS_FORMAT)
-    aggs = [
-        F.count(F.lit(1)).alias("n_load"),
-        F.sum(F.col("_complete").cast("long")).alias("n_complete"),
-        F.sum(kept.cast("long")).alias("n_dedup"),
-        F.sum((kept & F.col("passed")).cast("long")).alias("n_valid"),
-        F.min(F.when(kept, ts)).alias("dr_earliest"),
-        F.max(F.when(kept, ts)).alias("dr_latest"),
-        F.count(F.when(kept, ts)).cast("long").alias("dr_n"),
-    ]
-    # presence is tested on the CLEANED values, where clean_text has already
-    # coalesced absent columns to "" — so "ever non-blank" is the signal
-    # that the input carried the column (an input column holding only blank
-    # strings is indistinguishable post-clean; documented edge)
-    for c in candidate_cols:
-        aggs.append(
-            F.max(F.col(c).isNotNull() & (F.trim(F.col(c).cast("string")) != "")).alias(f"_has_{c}")
-        )
-    # completeness replicates the golden's counting (cleaner.py:199-200
-    # astype(str) rendering): a value is missing only when it is a non-null
-    # string that trims to "" — a null renders as 'None'/'NaN' and counts as
-    # present. quality_report.txt:26 (published_date 100.0% with one null
-    # parsed date) pins this; the funnel's drop-incomplete stage keeps the
-    # intended null=missing semantics (SURVEY.md §1.4).
-    for c in candidate_cols + ["published_date"]:
-        blank = F.col(c).isNotNull() & (F.trim(F.col(c).cast("string")) == "")
-        aggs.append(
-            F.sum(F.when(kept & ~blank, 1).otherwise(0)).cast("long").alias(f"_ne_{c}")
-        )
-    a = flagged.agg(*aggs).collect()[0]
-    n_load, n_complete, n_dedup, n_valid = (
-        int(a["n_load"]),
-        int(a["n_complete"] or 0),
-        int(a["n_dedup"] or 0),
-        int(a["n_valid"] or 0),
-    )
-    report_cols = (
-        [c for c in candidate_cols if a[f"_has_{c}"]] + ["published_date"]
-        if n_load
-        else []
-    )
+    # frame)
+    report_cols = [c for c in candidates if m[f"_has_{c}"]] + ["published_date"] if n_load else []
     n_dropped, n_dupes = n_load - n_complete, n_complete - n_dedup
     say(f"[1/6] loaded {n_load} records from {input_path}")
     say(f"[2/6] cleaned; dropped {n_dropped} incomplete, {n_complete} remaining")
     say(f"[3/6] dedup removed {n_dupes} duplicates, {n_dedup} remaining")
 
-    # failed-record details carry the reference's index: the 0-based position
-    # in the POST-DEDUP frame (cleaner.py reset_index after dedup), not the
-    # ingest record_id. The rank uses the same partition-offset technique as
-    # record_id assignment (sources/articles_json.py:30-60): range-partition
-    # the kept rows on record_id, collect one subtotal row per partition,
-    # and add each partition's global offset to its local row_number — no
-    # unpartitioned window (the old shape dragged every kept row through a
-    # single task). The ranged frame is cut to an EAGER LOCAL CHECKPOINT
-    # before the offsets collect: RangePartitioner's reservoir sample is
-    # seeded with the rdd id, which changes per job, so re-executing the
-    # range exchange in the later failed-detail jobs could assign different
-    # range bounds once input partitions exceed the per-partition sample
-    # size — the checkpoint pins one physical pid assignment for both jobs
-    # (same discipline as plans/curation_ext.py _q_equidepth_histogram).
-    nparts = max(2, spark.sparkContext.defaultParallelism)
-    ranged = (
-        flagged.where(kept)
-        .select(RECORD_ID, "passed", "reason", "message")
-        .repartitionByRange(nparts, F.col(RECORD_ID).asc())
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    off_rows, off_acc = [], 0
-    for pid, cnt in sorted(
-        (int(r["_pid"]), int(r["n"]))
-        for r in ranged.groupBy("_pid").agg(F.count(F.lit(1)).alias("n")).collect()
-    ):
-        off_rows.append((pid, off_acc))
-        off_acc += cnt
-    off = spark.createDataFrame(off_rows, "_pid int, _off long")
-    w_local = Window.partitionBy("_pid").orderBy(F.col(RECORD_ID).asc())
-    kept_pos = ranged.join(F.broadcast(off), "_pid").withColumn(
-        "_cleaned_idx", F.row_number().over(w_local) - 1 + F.col("_off")
-    )
-    failed = kept_pos.where(~F.col("passed"))
-    # distribution order = Counter.most_common: count desc, ties by first
-    # occurrence (validator.py:155 insertion order == cleaned-index order)
-    dist = [
-        (r["reason"], int(r["n"]))
-        for r in failed.groupBy("reason")
-        .agg(F.count(F.lit(1)).alias("n"), F.min(RECORD_ID).alias("first_at"))
-        .orderBy(F.desc("n"), F.asc("first_at"))
-        .collect()
-    ]
-    details = [
-        {"index": int(r["_cleaned_idx"]), "reason": r["reason"], "message": r["message"]}
-        for r in failed.select("_cleaned_idx", "reason", "message").orderBy("_cleaned_idx").collect()
-    ]
-    stats = ValidationStats(
-        total=n_dedup,
-        passed=n_valid,
-        failed=n_dedup - n_valid,
-        failure_reasons=dist,
-        failed_record_details=details,
-    )
+    stats = validation_stats(rows)
     say(f"[4/6] validation: {n_valid}/{n_dedup} passed")
 
-    comp_rows = [(c, int(a[f"_ne_{c}"] or 0), n_dedup) for c in report_cols]
-    # published_date strings are ISO-with-Z (UTC); the reference renders the
-    # range as tz-aware pandas Timestamps ('... 00:00:00+00:00')
-    dr = (
-        (
-            a["dr_earliest"].replace(tzinfo=timezone.utc),
-            a["dr_latest"].replace(tzinfo=timezone.utc),
-            int(a["dr_n"]),
-        )
-        if a["dr_n"]
-        else None
-    )
-
     # 4+6. save valid records
-    valid = flagged.where(kept & F.col("passed"))
-    n_saved = save_records_pretty(valid.orderBy(RECORD_ID), output_path, columns=report_cols)
+    n_saved = save_records_pretty(
+        [{c: r[c] for c in report_cols} for r in rows if r["passed"]], output_path
+    )
     say(f"[5/6] saved {n_saved} valid records to {output_path}")
 
     # 5. render + save report
+    dr = (_utc(m["dr_earliest"]), _utc(m["dr_latest"]), m["dr_n"]) if m["dr_n"] else None
     report = render_quality_report(
         original_count=n_load,
         cleaned_count=n_dedup,
         deleted_incomplete=n_dropped,
         deleted_duplicates=n_dupes,
-        completeness_rows=comp_rows,
+        completeness_rows=[(c, m[f"_ne_{c}"] or 0, n_dedup) for c in report_cols],
         stats=stats,
         date_range=dr,
         n_cleaned_rows=n_dedup,
@@ -258,4 +233,4 @@ def run_cleaning_pipeline(
     say(f"[6/6] wrote quality report to {report_path}")
     say(f"summary: {n_load} loaded -> {n_dedup} after cleaning -> {n_saved} valid (saved)")
 
-    return flagged.where(kept).drop("_complete", "_kept", "passed", "reason", "message")
+    return flagged.where(F.col("_kept")).drop(*FLAG_COLUMNS)

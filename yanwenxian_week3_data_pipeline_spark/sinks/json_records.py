@@ -2,8 +2,9 @@
 
 Two modes:
 - ``save_records_pretty`` — a single pretty-printed JSON array file, the
-  reference's output shape. Collects to the driver: valid ONLY for
-  fixture-scale outputs (the valid article set). Creates parent dirs.
+  reference's output shape, written from records already on the driver:
+  valid ONLY for fixture-scale outputs (the valid article set, which the
+  pipeline collects together with its report). Creates parent dirs.
 - ``save_records_distributed`` — ``df.write.json`` (JSONL, splittable,
   parallel) — the 100 TB path.
 """
@@ -16,14 +17,9 @@ from pathlib import Path
 from pyspark.sql import DataFrame
 
 
-def save_records_pretty(df: DataFrame, path: str | Path, columns: list[str] | None = None) -> int:
+def save_records_pretty(records: list[dict], path: str | Path) -> int:
     path = Path(path)
     path.parent.mkdir(parents=True, exist_ok=True)
-    cols = columns or df.columns
-    records = [
-        {c: row[c] for c in cols}
-        for row in df.select(*cols).toLocalIterator()
-    ]
     path.write_text(json.dumps(records, indent=2, ensure_ascii=False), encoding="utf-8")
     return len(records)
 

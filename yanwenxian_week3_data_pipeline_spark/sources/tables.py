@@ -125,12 +125,9 @@ def load_table(
     total = _local_parquet_bytes(path)
     if total is None or total < fanout_min_bytes:
         return df
-    try:
-        mpb_raw = spark.conf.get("spark.sql.files.maxPartitionBytes")
-        digits = "".join(c for c in str(mpb_raw) if c.isdigit())
-        mpb = int(digits) if digits else 128 * 1024 * 1024
-    except Exception:  # noqa: BLE001 - conf lookup must never break a scan
-        mpb = 128 * 1024 * 1024
+    # Spark's own reading of the conf, so unit strings ("128m", "1g") count
+    # as the bytes they mean
+    mpb = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
     par = spark.sparkContext.defaultParallelism
     est_splits = max(1, -(-total // mpb))
     if est_splits >= par:
