@@ -186,6 +186,10 @@ def test_envelope_shapes(spark, tmp_path_factory):
     empty.write_text("[]")
     assert load_articles(spark, str(empty)).count() == 0
 
+    empty_wrapper = d / "empty_wrapper.json"
+    empty_wrapper.write_text(json.dumps({"articles": []}))
+    assert load_articles(spark, str(empty_wrapper)).count() == 0
+
 
 def test_cli_main(spark, fixture_path, tmp_path_factory, capsys):
     """python -m yanwenxian_week3_data_pipeline_spark — the Spark twin of the

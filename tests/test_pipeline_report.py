@@ -14,6 +14,7 @@ from __future__ import annotations
 import json
 import os
 import random
+import re
 import time
 from collections import Counter
 from datetime import datetime
@@ -227,6 +228,42 @@ def test_rerun_on_rewritten_input_reports_new_file(spark, tmp_path):
     report, cleaned = _run(spark, src, tmp_path / "second")
     assert "Total records processed:   3" in report
     assert len(json.loads(cleaned)) == 1
+
+
+def test_empty_wrapper_writes_the_empty_report(spark, tmp_path):
+    """``{"articles": []}`` holds no records, like ``[]``: the same two
+    files, not an error."""
+    empty = tmp_path / "empty.json"
+    empty.write_text("[]")
+    wrapper = tmp_path / "empty_wrapper.json"
+    wrapper.write_text(json.dumps({"articles": []}))
+    assert _run(spark, wrapper, tmp_path / "wrapper") == _run(spark, empty, tmp_path / "plain")
+
+
+def test_record_ids_need_no_window_or_sort(spark, fixture_path, tmp_path, monkeypatch):
+    """Ids come from the read task's own row positions, so loading one
+    multiLine document plans no Window and no Sort, and the one action
+    has exactly two exchanges: the round-robin fan-out after the
+    single-split read and the dedup-key window."""
+    from yanwenxian_week3_data_pipeline_spark.sources.articles_json import load_articles
+
+    loaded = load_articles(spark, str(fixture_path))._jdf.queryExecution().executedPlan().toString()
+    assert not re.search(r"\b(Window|Sort)\b", loaded), loaded
+
+    plans = []
+    frame = type(spark.range(1))
+    collect = frame.collect
+
+    def spy(self):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return collect(self)
+
+    monkeypatch.setattr(frame, "collect", spy)
+    _run(spark, fixture_path, tmp_path)
+    assert len(plans) == 1
+    exchanges = re.findall(r"\bExchange (\w+)", plans[0])
+    assert sorted(exchanges) == ["RoundRobinPartitioning", "hashpartitioning"], plans[0]
+    assert "xxhash64(title" in plans[0]
 
 
 def test_one_run_submits_at_most_six_jobs(spark, fixture_path, tmp_path):

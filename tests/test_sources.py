@@ -124,6 +124,49 @@ def test_jsonl_audited_separates_corrupt_lines(spark, tmp_path):
     assert plain.where("title IS NULL AND content IS NULL AND url IS NULL").count() == 2
 
 
+def test_record_ids_follow_file_order_across_partitions(spark, tmp_path):
+    """With several input partitions the id is the partition's row offset
+    plus the row's position in it: dense and in file order, for a
+    JSON-Lines file read in >= 4 splits and for a directory of array
+    files."""
+    import json
+
+    from yanwenxian_week3_data_pipeline_spark.sources.articles_json import (
+        load_articles,
+        load_articles_jsonl,
+    )
+
+    def record(t):
+        return {"title": t, "content": "body " * 8, "url": f"https://x/{t}"}
+
+    titles = [f"t{i:05d}" for i in range(2000)]
+    feed = tmp_path / "feed.jsonl"
+    feed.write_text("\n".join(json.dumps(record(t)) for t in titles), encoding="utf-8")
+
+    # Spark packs files largest first, so the array files shrink in name
+    # order; each one is its own partition (multiLine files never split)
+    arrays = tmp_path / "arrays"
+    arrays.mkdir()
+    array_titles = []
+    for f, n in enumerate((40, 30, 20, 10)):
+        part = [f"f{f}-{i:02d}" for i in range(n)]
+        (arrays / f"part{f}.json").write_text(json.dumps([record(t) for t in part]), encoding="utf-8")
+        array_titles += part
+
+    def ids(df):
+        return sorted((r.record_id, r.title) for r in df.select("record_id", "title").collect())
+
+    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    try:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", "16k")
+        assert spark.read.json(str(feed)).rdd.getNumPartitions() >= 4
+        assert ids(load_articles_jsonl(spark, str(feed))) == list(enumerate(titles))
+        assert spark.read.json(str(arrays), multiLine=True).rdd.getNumPartitions() == 4
+        assert ids(load_articles(spark, str(arrays))) == list(enumerate(array_titles))
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+
+
 def test_load_articles_nonlist_wrapper_falls_through(spark, tmp_path):
     """{"articles": <non-list>} must follow the reference's dispatch
     (cleaner.py:137-142): NOT an empty frame — the whole dict becomes one

@@ -53,21 +53,9 @@ def hyperplane_matrix(n_planes: int, dim: int, seed: int) -> list[list[int]]:
     return (rs.randint(0, 2, size=(n_planes, dim)) * 2 - 1).tolist()
 
 
-def signed_projection_expr(vec: Column, plane: list[int]) -> Column:
-    """dot(vec, plane) ≥ 0 as a 0/1 long. Same float→double cast and
-    sequential left-to-right fold as ``dot_expr`` — the DuckDB twin folds in
-    the same order, so even a dot product within 1 ulp of zero gets the
-    same sign in both engines."""
-    prods = F.zip_with(
-        vec,
-        F.array(*[F.lit(float(p)) for p in plane]),
-        lambda x, y: x.cast("double") * y,
-    )
-    dot = F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
-    return (dot >= 0).cast("long")
-
-
 def signed_projection_sql(vec: str, plane: list[int]) -> str:
+    """dot(vec, plane) >= 0 as 0/1: float->double cast, then a sequential
+    left-to-right fold, the same order as ``dot_expr``."""
     lits = ", ".join(f"{float(p)!r}" for p in plane)
     prods = (
         f"list_transform(range(1, len({vec}) + 1), "
@@ -75,14 +63,6 @@ def signed_projection_sql(vec: str, plane: list[int]) -> str:
     )
     dot = f"list_reduce(list_prepend(0.0, {prods}), (acc, x) -> acc + x)"
     return f"(CASE WHEN {dot} >= 0 THEN 1 ELSE 0 END)"
-
-
-def band_value_expr(vec: Column, planes: list[list[int]]) -> Column:
-    """Integer band key: bit j of the band = sign bit of plane j."""
-    total = F.lit(0).cast("long")
-    for j, plane in enumerate(planes):
-        total = total + signed_projection_expr(vec, plane) * F.lit(1 << j).cast("long")
-    return total
 
 
 def band_value_sql(vec: str, planes: list[list[int]]) -> str:
@@ -97,7 +77,7 @@ def embedding_band_vals_udf(planes: list[list[int]], bands: int, bits: int):
     plane matrix, sign bits packed per band. ONE shared implementation for
     the batch LSH operator and its streaming twin — their equivalence test
     is structural, not copy-paste. Ties at projection exactly 0 count as
-    bit 1 (>= 0), matching signed_projection_expr/sql."""
+    bit 1 (>= 0), matching signed_projection_sql."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 

@@ -4,7 +4,8 @@
   dedupe on NORMALIZED key columns, keep the first occurrence in ingest
   order. ``dropDuplicates`` is not order-stable, so this is a
   ``row_number()`` window over the normalized key ordered by the explicit
-  ingest-order id.
+  ingest-order id. ``first_complete_flag`` is the same rule as a per-row
+  flag for the single-pass funnels (articles and documents).
 - ``dedup_exact``       — exact dedup at scale: group by content hash, keep
   min-id representative (EXT, LLM-pipeline surface).
 - ``minhash_signatures`` / ``dedup_minhash_lsh`` — MinHash+LSH near-dup:
@@ -70,6 +71,22 @@ def dedup_keep_first(
         .drop("_rn", *[f"_norm_{c}" for c in key_cols])
     )
     return out
+
+
+def first_complete_flag(complete: Column, keys: tuple[str, ...], order_col: str) -> Column:
+    """TRUE on the first complete row (by ``order_col``) per key: a running
+    count of complete rows over the key window. Incomplete rows share the
+    window but never advance the count, so the flag is ``dedup_keep_first``
+    applied to the complete subset, computed in the same pass as the
+    completeness flag instead of after a filter. ``keys`` must already be
+    normalized columns."""
+    # same xxhash64 prefix as dedup_keep_first
+    w = (
+        Window.partitionBy(F.xxhash64(*keys), *keys)
+        .orderBy(F.col(order_col).asc())
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return complete & (F.sum(complete.cast("int")).over(w) == 1)
 
 
 # ---------------------------------------------------------------------------

@@ -33,16 +33,6 @@ class DecodeNotAvailable(NotImplementedError):
     plumbing testable."""
 
 
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("media_type", StringType(), True),   # image/audio/video
-        StructField("payload", BinaryType(), True),       # opaque blob
-        StructField("byte_len", LongType(), True),
-        StructField("sha256", StringType(), True),
-    ]
-)
-
 FEATURE_SCHEMA = StructType(
     [
         StructField("media_id", LongType(), False),

@@ -32,12 +32,12 @@ from datetime import datetime, timezone
 from pathlib import Path
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
-from pyspark.sql.window import Window
 
 from .domains.articles import article_rules
 from .functions.dates import parse_iso_date_expr
-from .functions.text import clean_text_expr, not_missing_expr
-from .operators.incomplete import REQUIRED_ARTICLE_COLUMNS
+from .functions.text import clean_text_expr
+from .operators.dedup import first_complete_flag
+from .operators.incomplete import REQUIRED_ARTICLE_COLUMNS, complete_expr
 from .operators.validate import with_validation
 from .report import ValidationStats, render_quality_report
 from .schema import RECORD_ID, TEXT_COLUMNS
@@ -62,28 +62,15 @@ def flag_stages(cleaned: DataFrame) -> DataFrame:
 
     - ``_complete`` — survives drop_incomplete (no required column missing);
     - ``_kept``     — additionally survives keep-first dedup: first complete
-      row (by record_id) per (title, url) key. The keys are already
-      normalized by clean_articles (clean_text is idempotent), so the window
-      partitions on them directly; incomplete rows share the window but
-      never advance the conditional rank — exactly dedup_keep_first applied
-      to the complete subset;
+      row (by record_id) per (title, url) key (``first_complete_flag``). The
+      keys are already normalized by clean_articles (clean_text is
+      idempotent), so the window partitions on them directly;
     - ``passed/reason/message`` — the validation verdict columns.
     """
-    complete = F.lit(True)
-    for c in REQUIRED_ARTICLE_COLUMNS:
-        if c in cleaned.columns:
-            complete = complete & not_missing_expr(F.col(c))
+    complete = complete_expr(cleaned.columns, REQUIRED_ARTICLE_COLUMNS)
     flagged = cleaned.withColumn("_complete", complete)
-    # hash prefix on the key: same grouping, long-first shuffle comparisons
-    w = (
-        Window.partitionBy(F.xxhash64("title", "url"), "title", "url")
-        .orderBy(F.col(RECORD_ID).asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    flagged = flagged.withColumn(
-        "_kept",
-        F.col("_complete") & (F.sum(F.col("_complete").cast("int")).over(w) == 1),
-    )
+    kept = first_complete_flag(F.col("_complete"), ("title", "url"), RECORD_ID)
+    flagged = flagged.withColumn("_kept", kept)
     return with_validation(flagged, article_rules())
 
 

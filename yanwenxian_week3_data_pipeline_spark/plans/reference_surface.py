@@ -8,7 +8,6 @@ IDs reuse the SURVEY §2 inventory names.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.window import Window
 
 from ..functions.dates import parse_iso_date_expr, parse_iso_date_sql
 from ..functions.text import (
@@ -17,7 +16,7 @@ from ..functions.text import (
     is_missing_sql,
 )
 from ..operators.aggregates import completeness, date_range, failure_distribution, pass_rate
-from ..operators.dedup import dedup_keep_first
+from ..operators.dedup import dedup_keep_first, first_complete_flag
 from ..operators.validate import passed_expr, with_validation
 from ..sources.tables import load_table
 from . import QuerySpec
@@ -153,10 +152,9 @@ def _q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     then one aggregate produces all four stage counts (exploded to rows).
 
     - ``complete``: the completeness predicate;
-    - ``kept`` (dedup survivor): first complete row per dedup key, via a
-      conditional cumulative count over the key window — incomplete rows
-      share the window but never contribute to the rank, which is exactly
-      ``dedup_keep_first`` applied to the complete subset;
+    - ``kept`` (dedup survivor): first complete row per dedup key
+      (``first_complete_flag``, i.e. ``dedup_keep_first`` applied to the
+      complete subset);
     - ``valid``: kept ∧ all validation rules pass (row-local expressions).
 
     The staged form (four cascading DataFrames, one count each) scans and
@@ -164,16 +162,8 @@ def _q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     reads it once and shuffles once (the dedup-key window)."""
     docs = load_table(spark, sf_dir, "documents")
     flagged = cleaned_documents(docs).withColumn("_complete", complete_predicate())
-    # hash prefix on the dedup key: identical grouping, but shuffle-sort
-    # comparisons short-circuit on a long instead of multi-KB text
-    w = (
-        Window.partitionBy(F.xxhash64("text_clean"), "text_clean")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
     flagged = flagged.withColumn(
-        "_kept",
-        F.col("_complete") & (F.sum(F.col("_complete").cast("int")).over(w) == 1),
+        "_kept", first_complete_flag(F.col("_complete"), ("text_clean",), "doc_id")
     )
     # passed_expr, not with_validation: the funnel reads only the boolean,
     # but size(failures)==0 forces codegen of every rule's message

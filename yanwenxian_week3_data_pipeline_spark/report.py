@@ -43,6 +43,19 @@ def _header() -> list[str]:
     ]
 
 
+def _distribution_lines(stats: ValidationStats) -> list[str]:
+    if not stats.failure_reasons:
+        return ["  (none)"]
+    return [f"  {count:4d}  {REASON_LABELS.get(reason, reason)}" for reason, count in stats.failure_reasons]
+
+
+def _detail_lines(stats: ValidationStats) -> list[str]:
+    out = []
+    for d in stats.failed_record_details:
+        out += [f"  Index:  {d['index']}", f"  Reason: {d.get('message') or d.get('reason', 'Unknown')}", ""]
+    return out
+
+
 def render_quality_report(
     original_count: int,
     cleaned_count: int,
@@ -79,11 +92,7 @@ def render_quality_report(
     out.append("")
 
     out += ["4. VALIDATION FAILURE DISTRIBUTION", _RULE]
-    if stats.failure_reasons:
-        for reason, count in stats.failure_reasons:
-            out.append(f"  {count:4d}  {REASON_LABELS.get(reason, reason)}")
-    else:
-        out.append("  (none)")
+    out += _distribution_lines(stats)
     out.append("")
 
     out += ["5. DATE COVERAGE RANGE (publication date)", _RULE]
@@ -102,11 +111,7 @@ def render_quality_report(
     out.append("")
 
     if include_failed_details and stats.failed_record_details:
-        out += ["FAILED RECORD DETAILS", _RULE]
-        for d in stats.failed_record_details:
-            out.append(f"  Index:  {d['index']}")
-            out.append(f"  Reason: {d.get('message') or d.get('reason', 'Unknown')}")
-            out.append("")
+        out += ["FAILED RECORD DETAILS", _RULE, *_detail_lines(stats)]
 
     retention_pct = (cleaned_count / original_count * 100) if original_count else 0
     valid_pct = (stats.passed / original_count * 100) if original_count else 0
@@ -136,16 +141,8 @@ def render_validation_report(stats: ValidationStats, include_failed_details: boo
         "Failure reason distribution:",
         rule50,
     ]
-    if stats.failure_reasons:
-        for reason, count in stats.failure_reasons:
-            out.append(f"  {count:4d}  {REASON_LABELS.get(reason, reason)}")
-    else:
-        out.append("  (none)")
+    out += _distribution_lines(stats)
     out.append("")
     if include_failed_details and stats.failed_record_details:
-        out += ["Failed record details:", rule50]
-        for d in stats.failed_record_details:
-            out.append(f"  Index:  {d['index']}")
-            out.append(f"  Reason: {d.get('message') or d.get('reason', 'Unknown')}")
-            out.append("")
+        out += ["Failed record details:", rule50, *_detail_lines(stats)]
     return "\n".join(out)

@@ -5,9 +5,11 @@ Accepts the reference's four input envelope shapes (cleaner.py:124-143):
 1. top-level JSON array of records
 2. ``{"articles": [...]}`` wrapper
 3. a bare single object (treated as one record)
-4. ``null`` / empty array → empty DataFrame
+4. ``null`` / empty array (also an empty wrapper) → empty DataFrame
 
 and assigns an ingest-order ``record_id`` replacing the pandas row index.
+Neither the unwrap nor the ids sort or shuffle: an id is the position a
+row has in the task that reads it (``_with_record_id``).
 
 Scale note: ``multiLine=True`` makes a whole JSON document one split, which
 is correct for pretty-printed array files but not parallel. At 100 TB inputs
@@ -19,30 +21,34 @@ documented stable sort instead of physical order (SURVEY.md §7.3).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.window import Window
+from pyspark.sql.types import ArrayType, StructType
 
 from ..schema import ARTICLE_SCHEMA, RECORD_ID, conform
 
 
 def _with_record_id(df: DataFrame) -> DataFrame:
-    """Dense ingest-order id with full parallelism (zipWithIndex shape).
+    """Dense ingest-order id, computed where the rows are read (the
+    zipWithIndex shape).
 
-    ``monotonically_increasing_id`` encodes (partition index, in-partition
-    position), so ranking WITHIN each partition and adding a per-partition
-    row-count offset (one tiny count job, broadcast back) reproduces the
-    global ingest order without ever sorting the dataset into one task — a
-    plain ``Window.orderBy(mono)`` is a global window, which drags every
-    row through a single partition and caps the reader at one core.
-    Single-partition inputs (any multiLine document) skip the count job."""
+    ``monotonically_increasing_id`` is ``(partition index << 33) + position
+    in the partition``, counted in the task that reads the rows, so it
+    already orders them as read. With one partition (any multiLine
+    document) it is the id. With more, ``mono - (pid << 33)`` is the
+    position in the partition and the id adds the partition's offset, the
+    row count of every earlier partition. The position is known inside the
+    task, so no window is needed: nothing is sorted or exchanged, and each
+    split stays on its own core.
+
+    The offsets come from one count job (rows per partition) and join back
+    as a broadcast table. That keeps the plan the same size however many
+    splits the input has; an array or CASE literal of offsets inside the
+    expression would grow with the split count."""
+    if df.rdd.getNumPartitions() <= 1:
+        return df.withColumn(RECORD_ID, F.monotonically_increasing_id())
+
     mono = df.withColumn("_mono", F.monotonically_increasing_id()).withColumn(
         "_pid", F.spark_partition_id()
     )
-    w = Window.partitionBy("_pid").orderBy("_mono")
-    rn = (F.row_number().over(w) - 1).cast("long")
-
-    if df.rdd.getNumPartitions() <= 1:
-        return mono.withColumn(RECORD_ID, rn).drop("_mono", "_pid")
-
     spark = df.sparkSession
     counts = sorted(
         (r["_pid"], r["count"]) for r in mono.groupBy("_pid").count().collect()
@@ -52,9 +58,10 @@ def _with_record_id(df: DataFrame) -> DataFrame:
         offsets.append((pid, acc))
         acc += n
     off = spark.createDataFrame(offsets, "_pid int, _off long")
+    position = F.col("_mono") - F.shiftleft(F.col("_pid").cast("long"), 33)
     return (
         mono.join(F.broadcast(off), "_pid")
-        .withColumn(RECORD_ID, (F.col("_off") + rn))
+        .withColumn(RECORD_ID, F.col("_off") + position)
         .drop("_mono", "_pid", "_off")
     )
 
@@ -74,15 +81,17 @@ def load_articles(spark: SparkSession, path: str) -> DataFrame:
     if not cols or cols == ["_corrupt_record"]:
         return _empty(spark)
 
-    from pyspark.sql.types import ArrayType
-
-    if "articles" in cols and isinstance(raw.schema["articles"].dataType, ArrayType):
-        # {"articles": [...]} wrapper — posexplode keeps the array position
-        # so ingest order stays deterministic. A NON-list "articles" value
-        # falls through: the reference (cleaner.py:137-142) wraps the whole
-        # dict as one record in that case, same as the bare-object shape.
-        arr = raw.select(F.posexplode_outer("articles").alias("_pos", "_a"))
-        df = arr.select(F.col("_pos"), F.col("_a.*")).sort("_pos").drop("_pos")
+    articles = raw.schema["articles"].dataType if "articles" in cols else None
+    if isinstance(articles, ArrayType):
+        # {"articles": [...]} wrapper. explode keeps the array order inside
+        # the one read task, where the ids are assigned, so no sort is
+        # needed. An array with no object elements (``[]`` infers as
+        # array<string>) has no records. A NON-list "articles" value falls
+        # through: the reference (cleaner.py:137-142) wraps the whole dict
+        # as one record in that case, same as the bare-object shape.
+        if not isinstance(articles.elementType, StructType):
+            return _empty(spark)
+        df = raw.select(F.explode_outer("articles").alias("_a")).select("_a.*")
     else:
         # top-level array and bare single object both land here
         # (spark.read.json handles either as rows)
@@ -115,7 +124,7 @@ def load_articles_jsonl_audited(
     the ContextCleaner when they are GC'd) and the raw JSON-scan cache is
     unpersisted before returning — repeated audited loads do not accumulate
     session-lifetime cached scans."""
-    from pyspark.sql.types import StringType, StructField, StructType
+    from pyspark.sql.types import StringType, StructField
 
     audit_schema = StructType(
         list(ARTICLE_SCHEMA.fields) + [StructField("_corrupt_record", StringType(), True)]

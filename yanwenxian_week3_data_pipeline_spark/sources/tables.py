@@ -27,8 +27,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 # Declared read schemas. The driver parquet stores events.ts as
 # TIMESTAMP(MICROS, isAdjustedToUTC=false); the explicit schema forces NTZ
 # even in a session where ``spark.sql.parquet.inferTimestampNTZ.enabled`` is

@@ -5,7 +5,7 @@ and validated records are appended downstream — the shape article ingest
 has when the scraper feeds a directory/queue instead of one batch file.
 
 The stateless stages REUSE the batch expressions (``clean_articles``,
-``not_missing_expr``, ``with_validation``) — identical logical plans, so
+``complete_expr``, ``with_validation``) — identical logical plans, so
 batch and stream cannot drift. The one stateful stage is dedup:
 
 - batch ``dedup_keep_first`` = first record_id per normalized (title, url);
@@ -28,10 +28,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from ..domains.articles import article_rules
-from ..operators.incomplete import REQUIRED_ARTICLE_COLUMNS
+from ..operators.incomplete import REQUIRED_ARTICLE_COLUMNS, complete_expr
 from ..operators.validate import with_validation
 from ..pipeline import clean_articles
-from ..functions.text import not_missing_expr
 from ..schema import ARTICLE_SCHEMA, RECORD_ID
 
 # the JSONL feed carries the ingest-order record id assigned upstream
@@ -58,10 +57,7 @@ def clean_valid_stream(spark: SparkSession, src_dir: str) -> DataFrame:
     batch pipeline's saved output)."""
     cleaned = clean_articles(article_feed(spark, src_dir))
 
-    complete = F.lit(True)
-    for c in REQUIRED_ARTICLE_COLUMNS:
-        complete = complete & not_missing_expr(F.col(c))
-
+    complete = complete_expr(cleaned.columns, REQUIRED_ARTICLE_COLUMNS)
     deduped = cleaned.where(complete).dropDuplicates(["title", "url"])
 
     validated = with_validation(deduped, article_rules())
